@@ -86,6 +86,9 @@ def run_bench(
             release_shingle_caches()
         return best, best_steal
 
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    cfg = {"sf": sf, "cpus": cpus, "timing_method": "best_of_2"}
     timings: dict[str, float] = {}
     steal: dict[str, float] = {}
     for name in headline:
@@ -108,7 +111,7 @@ def run_bench(
     remeasured: dict[str, int] = {}
     flagged = [
         r["name"]
-        for r in _deltas_vs_prev(timings, steal).get("regressions", [])
+        for r in _deltas_vs_prev(timings, steal, cfg=cfg).get("regressions", [])
         if r["name"] in timings
     ]
     for name in flagged:
@@ -131,7 +134,7 @@ def run_bench(
     # a REAL plan regression reproduces there too.
     still = [
         r["name"]
-        for r in _deltas_vs_prev(timings, steal).get("regressions", [])
+        for r in _deltas_vs_prev(timings, steal, cfg=cfg).get("regressions", [])
         if r["name"] in timings
     ]
     fresh_proc: list[str] = []
@@ -151,17 +154,14 @@ def run_bench(
     extract_sec = timings.get("x1_extract_spans")
     docs_per_sec = round(n_docs / extract_sec, 2) if extract_sec else None
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     result = {
         "metric": "headline suite wall time (extraction + operator queries)",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "n_docs": n_docs,
         "docs_per_sec": docs_per_sec,
-        "cpus": cpus,
-        "timing_method": "best_of_2",
+        **cfg,
     }
     if steal:
         result["steal_pct"] = steal
@@ -169,7 +169,7 @@ def run_bench(
         result["remeasured_runs"] = remeasured
     if fresh_proc:
         result["fresh_process_retimed"] = fresh_proc
-    result.update(_deltas_vs_prev(timings, steal))
+    result.update(_deltas_vs_prev(timings, steal, cfg=cfg))
     result.update(_scaling_evidence())
     spark.stop()
     return result
@@ -282,14 +282,18 @@ def _deltas_vs_prev(
     timings: dict[str, float],
     steal: dict[str, float] | None = None,
     here: str | None = None,
+    *,
+    cfg: dict,
 ) -> dict:
     """Per-query deltas vs the most recent RECOVERABLE BENCH_r{N}.json
     (driver round record): negative pct = faster this round; queries
     slower by >10% are flagged as regressions, each with a one-line
     adjudication (steal-annotated — round-2 VERDICT tightened the
     threshold from 20% after d3 +2.2% and t1 +15.2% sailed through
-    unflagged). Comparable only when sf/cpus match, so those are
-    carried alongside.
+    unflagged). Timings are comparable only when sf, cpus and
+    timing_method all match: ``cfg`` carries this run's values, and a
+    previous record that differs in any of them yields no deltas and
+    no flags (a local[32] record says nothing about a 4-core run).
 
     Rounds are walked newest→oldest and the first whose queries can be
     parsed or tail-salvaged wins (round-4 VERDICT: BENCH_r04.json's
@@ -318,13 +322,16 @@ def _deltas_vs_prev(
             break
     if prev is None:
         return {}
+    prev_cfg = {"sf": prev.get("sf"), "cpus": prev.get("cpus"),
+                "timing_method": prev.get("timing_method", "single_run")}
+    if prev_cfg != {k: cfg.get(k) for k in prev_cfg}:
+        return {}
     prev_q = prev.get("queries") or {}
     deltas = {
         name: round((sec - prev_q[name]) / prev_q[name] * 100.0, 1)
         for name, sec in timings.items()
         if name in prev_q and prev_q[name]
     }
-    prev_method = prev.get("timing_method", "single_run")
     steal = steal or {}
     regressions = []
     for name in sorted(n for n, d in deltas.items() if d > 10.0):
@@ -338,22 +345,12 @@ def _deltas_vs_prev(
         regressions.append(
             {"name": name, "delta_pct": deltas[name], "steal_pct": s, "note": note}
         )
-    out = {
+    return {
         "prev_round": prev_name,
-        "prev_cfg": {"sf": prev.get("sf"), "cpus": prev.get("cpus"),
-                     "timing_method": prev_method},
+        "prev_cfg": prev_cfg,
         "delta_pct_vs_prev": deltas,
         "regressions": regressions,
     }
-    if prev_method != "best_of_2":
-        # methodology changed this round: prior rounds recorded single
-        # cold runs, so deltas overstate improvement by roughly the
-        # cold-start/CPU-steal overhead — not comparable 1:1
-        out["delta_caveat"] = (
-            "prev round used single-run timings; best-of-2 vs single-run "
-            "deltas overstate speedups and can hide sub-threshold regressions"
-        )
-    return out
 
 
 # the driver's tail capture is 2,000 bytes (both committed parsed:null
@@ -370,7 +367,6 @@ SPILL_KEYS = (
     "prev_cfg",
     "delta_pct_vs_prev",
     "regressions",
-    "delta_caveat",
 )
 
 

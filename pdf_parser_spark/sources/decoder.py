@@ -38,37 +38,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
-    FloatType,
     IntegerType,
     StringType,
     StructField,
     StructType,
-)
-
-TOKEN_STRUCT = StructType(
-    [
-        StructField("tok_seq", IntegerType()),
-        StructField("text", StringType()),
-        StructField("x", IntegerType()),
-        StructField("y", IntegerType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("block", IntegerType()),
-        StructField("par", IntegerType()),
-        StructField("line", IntegerType()),
-    ]
-)
-
-MATCH_STRUCT = StructType(
-    [
-        StructField("seq", IntegerType()),
-        StructField("x", IntegerType()),
-        StructField("y", IntegerType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("status", StringType()),
-        StructField("score", FloatType()),
-    ]
 )
 
 # Perception transport: the (tokens, matches) payload crosses the one
@@ -76,9 +49,7 @@ MATCH_STRUCT = StructType(
 # array<struct> transport through Arrow→pandas materializes per-element
 # Python dicts on both sides of every boundary — measured ~3-5× the
 # cost of the geometry itself — while a binary blob is a straight
-# memcpy. The relational OCR-token view (`tokens_relation`) explodes
-# the payload into the flat columnar table when relational access is
-# wanted; the extraction hot path never pays for it.
+# memcpy. Only the per-doc extraction kernel unpickles a payload.
 PERCEPTION_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -199,35 +170,3 @@ def decode_doc(doc_id: str, spans: list[dict], decoder: str = "synthetic"):
         envs[i + 1] = P.NativePerception(page_pre=pre)
     return pages, envs
 
-
-def decode_pages_for_doc(doc_id: str, spans: list[dict], decoder: str = "synthetic"):
-    """Back-compat wrapper: pages mapping only (both decoders accepted)."""
-    return decode_doc(doc_id, spans, decoder)[0]
-
-
-def tokens_relation(perception: DataFrame) -> DataFrame:
-    """Perception rows → the flat columnar OCR-token relation
-    (SURVEY.md §1.1: the engine's central fact table), for relational
-    consumers; the extraction hot path keeps the packed payload."""
-    import pickle
-
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("page_no", IntegerType())]
-        + list(TOKEN_STRUCT.fields)
-    )
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in out_schema.fields]
-        for pdf in batches:
-            rows = []
-            for doc_id, page_no, payload in zip(pdf["doc_id"], pdf["page_no"], pdf["payload"]):
-                toks = pickle.loads(bytes(payload))[0]
-                for t in toks:
-                    rows.append(
-                        (doc_id, page_no, t["tok_seq"], t["text"], t["x"], t["y"],
-                         t["w"], t["h"], t["block"], t["par"], t["line"])
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return perception.mapInPandas(explode, schema=out_schema)

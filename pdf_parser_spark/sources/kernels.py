@@ -27,10 +27,27 @@ these kernels implement the published formulas in float with final
 rounding. OCR output dominates any ±1 LSB pixel difference, and the
 downstream geometry consumes OCR tokens, not pixels.
 
-Vectorization: every kernel is whole-array numpy (no Python per-pixel
-loops); template match uses FFT cross-correlation + integral-image
-window statistics, O(HW log HW) per page independent of template count
-position — the same complexity class as OpenCV's DFT path.
+Working set: every kernel is whole-array numpy (no Python per-pixel
+loops) over row strips of ``_STRIP_ROWS`` (64) rows, with a halo where
+a stage reads neighbours (sharpen 1 row, Gaussian 4 rows, both
+reflected at the page edge). Only three things stay page-wide because
+their semantics need the whole page: the contrast mean (an exact
+integer luminance sum), the CLAHE tile histograms, and the page FFT of
+the template match. Between stages the page lives as uint8 buffers.
+Where values are exact integers the kernels use integer arithmetic or
+lookup tables (sharpen in int16 with a 12,241-entry output table,
+contrast as a 256-entry table, template-window sums in int64), so the
+output is bit-identical to the whole-page float64 formulation they
+replace. Per-page working set (tracemalloc peak of numpy allocations,
+900×1100 page): that formulation peaked at 107.6–112.9 MB in
+``preprocess_page`` alone, about 0.9 GB for a 300-DPI Letter page; the
+strip plan peaks at 16.7 MB in ``preprocess_page`` and 42.6 MB for a
+whole ``native_page_perception`` (both template matches, whose page
+FFT is now the peak).
+
+Template match uses FFT cross-correlation + window statistics,
+O(HW log HW) per page and template, the same complexity class as
+OpenCV's DFT path; each template's call computes its own page FFT.
 """
 
 from __future__ import annotations
@@ -67,8 +84,23 @@ _SHARPEN_KERNEL = np.array(
 )
 
 
+_STRIP_ROWS = 64
+
+
+def _strips(n: int):
+    """``(start, stop)`` row ranges tiling ``range(n)``."""
+    for y0 in range(0, n, _STRIP_ROWS):
+        yield y0, min(y0 + _STRIP_ROWS, n)
+
+
 def _clip_u8(a: np.ndarray) -> np.ndarray:
     return np.clip(np.rint(a), 0, 255).astype(np.uint8)
+
+
+# 34·center − 2·(3×3 box sum) of uint8 pixels lies in [−4080, 8160]:
+# one output level per possible accumulator value.
+_SHARPEN_MIN = -2 * 8 * 255
+_SHARPEN_LUT = _clip_u8(np.arange(_SHARPEN_MIN, 32 * 255 + 1).astype(np.float32) / 16.0)
 
 
 def sharpen_rgb(rgb: np.ndarray) -> np.ndarray:
@@ -77,17 +109,18 @@ def sharpen_rgb(rgb: np.ndarray) -> np.ndarray:
     PIL's 3×3 convolution leaves the one-pixel border unfiltered
     (copied from the source) — reproduced here. The kernel
     (-2 everywhere, 34 center... i.e. 32 center, /16) decomposes as
-    34·center − 2·(3×3 box sum), so one integral image replaces nine
-    shifted multiplies.
+    34·center − 2·(3×3 box sum), exact in int16, and the rounded,
+    clipped ``acc / 16`` comes from a table indexed by ``acc``.
     """
     out = rgb.copy()
     if rgb.shape[0] < 3 or rgb.shape[1] < 3:
         return out
-    img = rgb.astype(np.int32)
-    rows = img[:-2] + img[1:-1] + img[2:]  # vertical 3-sums
-    box = rows[:, :-2] + rows[:, 1:-1] + rows[:, 2:]  # 3x3 box sums at interior
-    acc = 34 * img[1:-1, 1:-1] - 2 * box
-    out[1:-1, 1:-1] = _clip_u8(acc.astype(np.float32) / 16.0)
+    for y0, y1 in _strips(rgb.shape[0] - 2):
+        img = rgb[y0 : y1 + 2].astype(np.int16)  # strip + 1-row halo each side
+        rows = img[:-2] + img[1:-1] + img[2:]  # vertical 3-sums
+        box = rows[:, :-2] + rows[:, 1:-1] + rows[:, 2:]  # 3x3 box sums at interior
+        acc = 34 * img[1:-1, 1:-1] - 2 * box - _SHARPEN_MIN
+        out[y0 + 1 : y1 + 1, 1:-1] = _SHARPEN_LUT.take(acc)
     return out
 
 
@@ -101,9 +134,16 @@ def luminance_l(rgb: np.ndarray) -> np.ndarray:
 
 def contrast_rgb(rgb: np.ndarray, factor: float = 1.15) -> np.ndarray:
     """PIL ``ImageEnhance.Contrast(img).enhance(factor)``: blend toward the
-    solid mean-luminance gray; factor > 1 extrapolates away from it."""
-    mean = int(np.mean(luminance_l(rgb)) + 0.5)
-    return _clip_u8(mean + factor * (rgb.astype(np.float64) - mean))
+    solid mean-luminance gray; factor > 1 extrapolates away from it.
+    The mean is an exact integer sum over strips (what ``np.mean`` of
+    the uint8 luminance computes); the blend is a 256-entry table."""
+    total = sum(int(luminance_l(rgb[y0:y1]).sum(dtype=np.int64)) for y0, y1 in _strips(rgb.shape[0]))
+    mean = int(total / (rgb.shape[0] * rgb.shape[1]) + 0.5)
+    lut = _clip_u8(mean + factor * (np.arange(256, dtype=np.float64) - mean))
+    out = np.empty(rgb.shape, np.uint8)
+    for y0, y1 in _strips(rgb.shape[0]):
+        out[y0:y1] = lut.take(rgb[y0:y1])  # take() widens its indices to intp
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -149,15 +189,14 @@ _DELIN_LUT8 = np.clip(
 ).astype(np.uint8)
 
 
-def _srgb_delinearize(v: np.ndarray) -> np.ndarray:
-    """Float delinearization (kept for generic callers/tests)."""
-    vv = np.clip(v, 0.0, 1.0)
-    return np.where(vv <= 0.0031308, vv * 12.92, 1.055 * vv ** (1 / 2.4) - 0.055)
-
-
 def _delinearize_to_u8(lin: np.ndarray) -> np.ndarray:
     idx = np.clip(np.rint(lin * _DELIN_STEPS), 0, _DELIN_STEPS).astype(np.int32)
-    return _DELIN_LUT8[idx]
+    return _DELIN_LUT8.take(idx)
+
+
+_RGB2XYZN = (_SRGB2XYZ.T / _D65).astype(np.float32)
+_XYZN2RGB = _XYZ2SRGB.T.astype(np.float32)
+_D65_F32 = _D65.astype(np.float32)
 
 
 def rgb_to_lab_u8(rgb: np.ndarray) -> np.ndarray:
@@ -165,31 +204,36 @@ def rgb_to_lab_u8(rgb: np.ndarray) -> np.ndarray:
     L*255/100, a+128, b+128."""
     if _USE_CV2:  # pragma: no cover - sandbox lacks cv2
         return _cv2.cvtColor(np.ascontiguousarray(rgb), _cv2.COLOR_RGB2LAB)
-    lin = _LINEARIZE_LUT[rgb]
-    xyz = lin @ (_SRGB2XYZ.T / _D65).astype(np.float32)
-    f = np.where(xyz > 0.008856, np.cbrt(xyz), 7.787 * xyz + np.float32(16.0 / 116.0))
-    L = 116.0 * f[..., 1] - 16.0
-    a = 500.0 * (f[..., 0] - f[..., 1]) + 128.0
-    b = 200.0 * (f[..., 1] - f[..., 2]) + 128.0
-    return _clip_u8(np.stack([L * 255.0 / 100.0, a, b], axis=-1))
+    out = np.empty(rgb.shape, np.uint8)
+    for y0, y1 in _strips(rgb.shape[0]):
+        xyz = _LINEARIZE_LUT.take(rgb[y0:y1]) @ _RGB2XYZN
+        f = np.where(xyz > 0.008856, np.cbrt(xyz), 7.787 * xyz + np.float32(16.0 / 116.0))
+        L = 116.0 * f[..., 1] - 16.0
+        a = 500.0 * (f[..., 0] - f[..., 1]) + 128.0
+        b = 200.0 * (f[..., 1] - f[..., 2]) + 128.0
+        out[y0:y1] = _clip_u8(np.stack([L * 255.0 / 100.0, a, b], axis=-1))
+    return out
 
 
 def lab_to_rgb_u8(lab: np.ndarray) -> np.ndarray:
     """cv2 ``COLOR_LAB2RGB`` inverse of :func:`rgb_to_lab_u8`."""
     if _USE_CV2:  # pragma: no cover
         return _cv2.cvtColor(np.ascontiguousarray(lab), _cv2.COLOR_LAB2RGB)
-    L = lab[..., 0].astype(np.float32) * np.float32(100.0 / 255.0)
-    a = lab[..., 1].astype(np.float32) - np.float32(128.0)
-    b = lab[..., 2].astype(np.float32) - np.float32(128.0)
-    fy = (L + 16.0) / np.float32(116.0)
-    fx = fy + a / np.float32(500.0)
-    fz = fy - b / np.float32(200.0)
-    f = np.stack([fx, fy, fz], axis=-1)
-    f3 = f * f * f
-    xyz = np.where(f3 > 0.008856, f3, (f - np.float32(16.0 / 116.0)) / np.float32(7.787))
-    xyz *= _D65.astype(np.float32)
-    lin = xyz @ _XYZ2SRGB.T.astype(np.float32)
-    return _delinearize_to_u8(np.clip(lin, 0.0, 1.0))
+    out = np.empty(lab.shape, np.uint8)
+    for y0, y1 in _strips(lab.shape[0]):
+        s = lab[y0:y1]
+        L = s[..., 0].astype(np.float32) * np.float32(100.0 / 255.0)
+        a = s[..., 1].astype(np.float32) - np.float32(128.0)
+        b = s[..., 2].astype(np.float32) - np.float32(128.0)
+        fy = (L + 16.0) / np.float32(116.0)
+        fx = fy + a / np.float32(500.0)
+        fz = fy - b / np.float32(200.0)
+        f = np.stack([fx, fy, fz], axis=-1)
+        f3 = f * f * f
+        xyz = np.where(f3 > 0.008856, f3, (f - np.float32(16.0 / 116.0)) / np.float32(7.787))
+        xyz *= _D65_F32
+        out[y0:y1] = _delinearize_to_u8(np.clip(xyz @ _XYZN2RGB, 0.0, 1.0))
+    return out
 
 
 def rgb_to_gray_u8(rgb: np.ndarray) -> np.ndarray:
@@ -197,10 +241,14 @@ def rgb_to_gray_u8(rgb: np.ndarray) -> np.ndarray:
     14-bit fixed-point rounding."""
     if _USE_CV2:  # pragma: no cover
         return _cv2.cvtColor(np.ascontiguousarray(rgb), _cv2.COLOR_RGB2GRAY)
-    r = rgb[..., 0].astype(np.uint32)
-    g = rgb[..., 1].astype(np.uint32)
-    b = rgb[..., 2].astype(np.uint32)
-    return ((r * 4899 + g * 9617 + b * 1868 + 8192) >> 14).astype(np.uint8)
+    out = np.empty(rgb.shape[:-1], np.uint8)
+    for y0, y1 in _strips(rgb.shape[0]):
+        s = rgb[y0:y1]
+        r = s[..., 0].astype(np.uint32)
+        g = s[..., 1].astype(np.uint32)
+        b = s[..., 2].astype(np.uint32)
+        out[y0:y1] = (r * 4899 + g * 9617 + b * 1868 + 8192) >> 14
+    return out
 
 
 def rgb_to_hsv_u8(rgb: np.ndarray) -> np.ndarray:
@@ -283,29 +331,34 @@ def clahe_u8(channel: np.ndarray, clip_limit: float = 2.0, tiles: int = 8) -> np
                 hist[ty, tx, idx] += 1
 
     scale = 255.0 / tile_area
-    luts = np.rint(np.cumsum(hist, axis=-1) * scale).clip(0, 255)  # (T,T,256)
+    luts = np.rint(np.cumsum(hist, axis=-1) * scale).clip(0, 255).ravel()  # (T·T·256,)
 
     # bilinear interpolation between tile LUTs over the ORIGINAL extent
-    ys = np.arange(h)
-    xs = np.arange(w)
-    tyf = ys / th - 0.5
-    txf = xs / tw - 0.5
+    tyf = np.arange(h) / th - 0.5
+    txf = np.arange(w) / tw - 0.5
     ty1 = np.floor(tyf).astype(int)
     tx1 = np.floor(txf).astype(int)
-    ya = (tyf - ty1)[:, None]
-    xa = (txf - tx1)[None, :]
-    ty1c = np.clip(ty1, 0, tiles - 1)[:, None]
-    ty2c = np.clip(ty1 + 1, 0, tiles - 1)[:, None]
-    tx1c = np.clip(tx1, 0, tiles - 1)[None, :]
-    tx2c = np.clip(tx1 + 1, 0, tiles - 1)[None, :]
+    ya = tyf - ty1
+    xa = txf - tx1
+    ty1c = np.clip(ty1, 0, tiles - 1) * (tiles * 256)
+    ty2c = np.clip(ty1 + 1, 0, tiles - 1) * (tiles * 256)
+    tx1c = np.clip(tx1, 0, tiles - 1) * 256
+    tx2c = np.clip(tx1 + 1, 0, tiles - 1) * 256
 
-    v = channel[:h, :w]
-    p11 = luts[ty1c, tx1c, v]
-    p12 = luts[ty1c, tx2c, v]
-    p21 = luts[ty2c, tx1c, v]
-    p22 = luts[ty2c, tx2c, v]
-    out = (p11 * (1 - xa) + p12 * xa) * (1 - ya) + (p21 * (1 - xa) + p22 * xa) * ya
-    return _clip_u8(out)
+    out = np.empty((h, w), np.uint8)
+    for y0, y1 in _strips(h):
+        v = channel[y0:y1].astype(np.intp)
+        r1 = ty1c[y0:y1, None] + v
+        r2 = ty2c[y0:y1, None] + v
+        p11 = luts.take(r1 + tx1c)
+        p12 = luts.take(r1 + tx2c)
+        p21 = luts.take(r2 + tx1c)
+        p22 = luts.take(r2 + tx2c)
+        yb = ya[y0:y1, None]
+        out[y0:y1] = _clip_u8(
+            (p11 * (1 - xa) + p12 * xa) * (1 - yb) + (p21 * (1 - xa) + p22 * xa) * yb
+        )
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -326,25 +379,34 @@ def gaussian_kernel_1d(sigma: float, ksize: int = 0) -> np.ndarray:
 
 def gaussian_blur_u8(gray: np.ndarray, sigma: float) -> np.ndarray:
     """cv2 ``GaussianBlur(src, (0,0), sigma)``: separable kernel,
-    BORDER_REFLECT_101 (numpy 'reflect')."""
+    BORDER_REFLECT_101 (numpy 'reflect'). Each strip reads a halo of
+    ``ksize // 2`` rows, reflected at the page edge."""
     if _USE_CV2:  # pragma: no cover
         return _cv2.GaussianBlur(np.ascontiguousarray(gray), (0, 0), sigma)
     k = gaussian_kernel_1d(sigma)
     r = len(k) // 2
-    padded = np.pad(gray.astype(np.float64), r, mode="reflect")
-    # horizontal then vertical pass via strided dot
-    tmp = np.zeros((padded.shape[0], gray.shape[1]))
-    for i, kv in enumerate(k):
-        tmp += kv * padded[:, i : i + gray.shape[1]]
-    out = np.zeros(gray.shape)
-    for i, kv in enumerate(k):
-        out += kv * tmp[i : i + gray.shape[0], :]
-    return _clip_u8(out)
+    H, W = gray.shape
+    rows = np.pad(np.arange(H), r, mode="reflect")  # padded row → source row
+    out = np.empty((H, W), np.uint8)
+    for y0, y1 in _strips(H):
+        padded = np.pad(gray[rows[y0 : y1 + 2 * r]].astype(np.float64), ((0, 0), (r, r)), mode="reflect")
+        # horizontal then vertical pass via strided dot
+        tmp = np.zeros((padded.shape[0], W))
+        for i, kv in enumerate(k):
+            tmp += kv * padded[:, i : i + W]
+        acc = np.zeros((y1 - y0, W))
+        for i, kv in enumerate(k):
+            acc += kv * tmp[i : i + y1 - y0, :]
+        out[y0:y1] = _clip_u8(acc)
+    return out
 
 
 def add_weighted_u8(a: np.ndarray, alpha: float, b: np.ndarray, beta: float, gamma: float = 0.0) -> np.ndarray:
-    """cv2 ``addWeighted`` with uint8 saturation."""
-    return _clip_u8(a.astype(np.float64) * alpha + b.astype(np.float64) * beta + gamma)
+    """cv2 ``addWeighted`` with uint8 saturation (same-shape inputs)."""
+    out = np.empty(a.shape, np.uint8)
+    for y0, y1 in _strips(a.shape[0]):
+        out[y0:y1] = _clip_u8(a[y0:y1].astype(np.float64) * alpha + b[y0:y1].astype(np.float64) * beta + gamma)
+    return out
 
 
 def unsharp_gray(gray: np.ndarray, radius: float = 1.2, amount: float = 1.3) -> np.ndarray:
@@ -358,9 +420,9 @@ def preprocess_page(rgb: np.ndarray, clahe: bool = True) -> np.ndarray:
     """K2 — the full preprocess chain (extractor.py:108-137):
     SHARPEN → Contrast(1.15) → CLAHE(2.0, 8×8) on LAB-L → unsharp
     grayscale re-expanded to RGB (the reference's final step collapses
-    the page to enhanced grayscale replicated across channels)."""
-    img = sharpen_rgb(rgb)
-    img = contrast_rgb(img, 1.15)
+    the page to enhanced grayscale replicated across channels). Every
+    stage runs strip by strip; stages hand over uint8 page buffers."""
+    img = contrast_rgb(sharpen_rgb(rgb), 1.15)
     if clahe:
         lab = rgb_to_lab_u8(img)
         lab[..., 0] = clahe_u8(lab[..., 0], 2.0, 8)
@@ -374,22 +436,26 @@ def preprocess_page(rgb: np.ndarray, clahe: bool = True) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _xcorr_valid(img: np.ndarray, tmpl: np.ndarray) -> np.ndarray:
-    """Valid-mode cross-correlation via FFT (no scipy)."""
-    H, W = img.shape
+def _xcorr_valid(gray: np.ndarray, tmpl: np.ndarray) -> np.ndarray:
+    """Valid-mode cross-correlation via FFT (no scipy). The page spectrum
+    is the one page-wide float stage; each spectrum is dropped as soon
+    as the product no longer needs it."""
+    H, W = gray.shape
     h, w = tmpl.shape
-    F = np.fft.rfft2(img)
+    F = np.fft.rfft2(gray.astype(np.float64))
     T = np.fft.rfft2(tmpl, s=(H, W))
-    corr = np.fft.irfft2(F * np.conj(T), s=(H, W))
-    return corr[: H - h + 1, : W - w + 1]
+    prod = F * np.conj(T)
+    del F, T
+    return np.fft.irfft2(prod, s=(H, W))[: H - h + 1, : W - w + 1]
 
 
 def match_template_ccoeff_normed(gray: np.ndarray, tmpl: np.ndarray) -> np.ndarray:
     """cv2 ``matchTemplate(..., TM_CCOEFF_NORMED)``:
 
     R(x,y) = Σ T'·I' / sqrt(Σ T'² · Σ I'²) with both sides mean-centered
-    per window. Window statistics via integral images; numerator via one
-    FFT cross-correlation with the centered template. Degenerate-window
+    per window. Window statistics via exact int64 running sums, strip by
+    strip; numerator via one FFT cross-correlation with the centered
+    template. Degenerate-window
     handling mirrors OpenCV's crossCorr epilogue (flat window → 0, near-
     saturated ratio → ±1).
     """
@@ -398,38 +464,46 @@ def match_template_ccoeff_normed(gray: np.ndarray, tmpl: np.ndarray) -> np.ndarr
             np.ascontiguousarray(gray), np.ascontiguousarray(tmpl),
             _cv2.TM_CCOEFF_NORMED,
         )
-    img = gray.astype(np.float64)
     t = tmpl.astype(np.float64)
     h, w = t.shape
     n = h * w
     t_c = t - t.mean()
     t_norm2 = float((t_c**2).sum())
 
-    num = _xcorr_valid(img, t_c)
+    num = _xcorr_valid(gray, t_c)
 
-    ii = np.pad(img, ((1, 0), (1, 0))).cumsum(0).cumsum(1)
-    ii2 = np.pad(img**2, ((1, 0), (1, 0))).cumsum(0).cumsum(1)
-    H, W = img.shape
-    ys = np.arange(H - h + 1)
-    xs = np.arange(W - w + 1)
-    win_sum = ii[ys[:, None] + h, xs[None, :] + w] - ii[ys[:, None], xs[None, :] + w] \
-        - ii[ys[:, None] + h, xs[None, :]] + ii[ys[:, None], xs[None, :]]
-    win_sum2 = ii2[ys[:, None] + h, xs[None, :] + w] - ii2[ys[:, None], xs[None, :] + w] \
-        - ii2[ys[:, None] + h, xs[None, :]] + ii2[ys[:, None], xs[None, :]]
+    out = np.empty(num.shape, np.float32)
+    eps = np.finfo(np.float64).eps * n
+    for y0, y1 in _strips(num.shape[0]):
+        win = gray[y0 : y1 + h - 1].astype(np.int64)  # strip + (h-1)-row halo below
+        win_sum = _window_sums(win, h, w).astype(np.float64)
+        win_sum2 = _window_sums(win * win, h, w).astype(np.float64)
+        var = np.maximum(win_sum2 - win_sum**2 / n, 0.0)
+        denom = np.sqrt(var * t_norm2)
 
-    var = np.maximum(win_sum2 - win_sum**2 / n, 0.0)
-    denom = np.sqrt(var * t_norm2)
+        s = num[y0:y1]
+        r = np.zeros_like(s)
+        ok = denom > eps
+        np.divide(s, denom, out=r, where=ok)
+        # OpenCV clamps |num| slightly above denom to ±1, beyond that to 0
+        over = ok & (np.abs(s) >= denom)
+        if over.any():
+            r[over] = np.where(np.abs(s[over]) < denom[over] * 1.125, np.sign(s[over]), 0.0)
+        out[y0:y1] = r
+    return out
 
-    out = np.zeros_like(num)
-    ok = denom > np.finfo(np.float64).eps * n
-    np.divide(num, denom, out=out, where=ok)
-    # OpenCV clamps |num| slightly above denom to ±1, beyond that to 0
-    absn = np.abs(num)
-    near = ok & (absn >= denom) & (absn < denom * 1.125)
-    out[near] = np.sign(num[near])
-    out[ok & (absn >= denom * 1.125)] = 0.0
-    out[~ok] = 0.0
-    return out.astype(np.float32)
+
+def _window_sums(a: np.ndarray, h: int, w: int) -> np.ndarray:
+    """Sum of every h×w window of an integer array (valid mode), by
+    running sums and slicing. Exact: the float64 statistics built from
+    it hold integers below 2**53."""
+    c = np.cumsum(a, axis=0)
+    v = c[h - 1 :].copy()
+    v[1:] -= c[:-h]
+    c = np.cumsum(v, axis=1)
+    s = c[:, w - 1 :].copy()
+    s[:, 1:] -= c[:, :-w]
+    return s
 
 
 def match_template_boxes(gray: np.ndarray, tmpl: np.ndarray, status: str,
@@ -612,7 +686,7 @@ def rasterize_pdf_bytes(data: bytes, dpi: int = 300) -> list[np.ndarray]:
 def tesseract_image_to_data(img: np.ndarray, psm: int = 6, lang: str | None = None,
                             config: str = "") -> list[dict]:
     """K4 — OCR an image array into token rows in the engine's
-    TOKEN_STRUCT shape (reference: pytesseract.image_to_data
+    ``schemas.OCR_TOKENS_SCHEMA`` shape, less doc_id/page_no (reference: pytesseract.image_to_data
     Output.DICT, PSM 6 — extractor.py:987-989, constants.py:59).
     ``tok_seq`` is the raw Tesseract emission index (the reference
     consumes the parallel arrays positionally, extractor.py:289-301)."""
@@ -690,7 +764,7 @@ def native_page_perception(
     swap in a deterministic recognizer for the gated Tesseract call.
     """
     pre = preprocess_page(rgb_page)
-    gray = rgb_to_gray_u8(pre)
+    gray = pre[..., 0]  # the page is gray replicated: RGB2GRAY is the identity
     ticked = match_template_boxes(gray, ticked_tmpl, "ticked", threshold)
     empty = match_template_boxes(gray, empty_tmpl, "empty", threshold)
     matches = [dict(m, seq=i) for i, m in enumerate(ticked + empty)]

@@ -244,7 +244,7 @@ def load_page_rgb(media_ref: str, page_index: int | None = None, dpi: int = 300)
         arr = np.load(io.BytesIO(data))
         if arr.ndim == 2:
             arr = np.repeat(arr[..., None], 3, axis=-1)
-        return arr.astype(np.uint8)
+        return arr.astype(np.uint8, copy=False)
     if data[:5] == b"%PDF-":
         return K.rasterize_pdf_page(data, page_index, dpi)
     try:

@@ -18,9 +18,12 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import pytest
+
 import bench
 
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+R03_CFG = {"sf": 0.1, "cpus": 32, "timing_method": "best_of_2"}
 
 
 def _stage(tmp_path, *names):
@@ -35,13 +38,27 @@ def test_deltas_survive_parsed_null_record(tmp_path):
     """The r3 record has parsed:null but its tail still carries the
     full queries object; deltas must recover it, not crash."""
     here = _stage(tmp_path, ("bench_r03.json", "BENCH_r03.json"))
-    out = bench._deltas_vs_prev({"x1_extract_spans": 3.516}, {}, here=here)
+    out = bench._deltas_vs_prev({"x1_extract_spans": 3.516}, {}, here=here, cfg=R03_CFG)
     assert out, "deltas should not be empty — the tail is recoverable"
     # recovered from the r3 tail: x1 was 3.516 s, so delta is ~0
     assert abs(out["delta_pct_vs_prev"]["x1_extract_spans"]) < 0.1
     assert out["prev_round"] == "BENCH_r03.json"
-    assert out["prev_cfg"] == {"sf": 0.1, "cpus": 32, "timing_method": "best_of_2"}
+    assert out["prev_cfg"] == R03_CFG
     assert out["regressions"] == []
+
+
+@pytest.mark.parametrize(
+    "change",
+    [{"cpus": 4}, {"sf": 0.01}, {"timing_method": "single_run"}],
+)
+def test_deltas_empty_when_config_differs(tmp_path, change):
+    """A run that differs from the previous record in sf, cpus or
+    timing_method gets no deltas and no regression flags, however much
+    slower it reads (r03 timed x1 at 3.516 s on local[32])."""
+    here = _stage(tmp_path, ("bench_r03.json", "BENCH_r03.json"))
+    slower = {"x1_extract_spans": 3.516 * 3}
+    assert bench._deltas_vs_prev(slower, {}, here=here, cfg=R03_CFG)["regressions"]
+    assert bench._deltas_vs_prev(slower, {}, here=here, cfg={**R03_CFG, **change}) == {}
 
 
 def test_deltas_fall_back_past_unrecoverable_round(tmp_path):
@@ -53,7 +70,7 @@ def test_deltas_fall_back_past_unrecoverable_round(tmp_path):
         ("bench_r03.json", "BENCH_r03.json"),
         ("bench_r04_truncated.json", "BENCH_r04.json"),
     )
-    out = bench._deltas_vs_prev({"x1_extract_spans": 3.516}, {}, here=here)
+    out = bench._deltas_vs_prev({"x1_extract_spans": 3.516}, {}, here=here, cfg=R03_CFG)
     assert out, "unrecoverable r4 must not empty the deltas"
     assert out["prev_round"] == "BENCH_r03.json"
     assert abs(out["delta_pct_vs_prev"]["x1_extract_spans"]) < 0.1
@@ -61,7 +78,7 @@ def test_deltas_fall_back_past_unrecoverable_round(tmp_path):
 
 def test_deltas_empty_when_nothing_recoverable(tmp_path):
     here = _stage(tmp_path, ("bench_r04_truncated.json", "BENCH_r04.json"))
-    assert bench._deltas_vs_prev({"x1_extract_spans": 3.5}, {}, here=here) == {}
+    assert bench._deltas_vs_prev({"x1_extract_spans": 3.5}, {}, here=here, cfg=R03_CFG) == {}
 
 
 def test_recover_from_tail_roundtrip():
