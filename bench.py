@@ -384,8 +384,9 @@ def _next_round_detail_path(here: str) -> str:
     return os.path.join("BENCH", f"record_r{n:02d}.json")
 
 
-def _compact_line(result: dict, detail_rel: str) -> tuple[str, dict]:
-    """(final stdout line, full detail record). The line keeps the
+def _compact_line(result: dict, detail_rel: str) -> tuple[str, dict, dict]:
+    """(final stdout line, the compact record it encodes, full detail
+    record). The line keeps the
     driver-contract fields plus compact regression pointers; everything
     in SPILL_KEYS lives only in the detail file. If the line still
     overflows (headline suite growth), the scaling block degrades to
@@ -401,7 +402,7 @@ def _compact_line(result: dict, detail_rel: str) -> tuple[str, dict]:
     if len(line) >= MAX_LINE_BYTES and "scaling" in compact:
         compact["scaling"] = {"file": compact["scaling"].get("file", "BENCH/scaling.json")}
         line = json.dumps(compact, separators=(",", ":"))
-    return line, detail
+    return line, compact, detail
 
 
 def _parse_args(argv: list[str]) -> dict:
@@ -440,11 +441,11 @@ if __name__ == "__main__":
     # path; the line self-verifies it round-trips and fits.
     here = os.path.dirname(os.path.abspath(__file__))
     detail_rel = _next_round_detail_path(here)
-    line, detail = _compact_line(result, detail_rel)
+    line, compact, detail = _compact_line(result, detail_rel)
     os.makedirs(os.path.join(here, "BENCH"), exist_ok=True)
     with open(os.path.join(here, detail_rel), "w") as f:
         json.dump(detail, f, indent=1)
-    assert json.loads(line), "bench JSON does not round-trip"
+    assert json.loads(line) == compact, "bench JSON does not round-trip"
     assert "\n" not in line, "bench JSON must be a single line"
     assert len(line) < MAX_LINE_BYTES, f"bench JSON line too long ({len(line)} bytes)"
     sys.stdout.flush()

@@ -186,8 +186,8 @@ def _corrupt_il1(word: str, r: random.Random) -> str:
     return word[:idx] + repl + word[idx + 1 :]
 
 
-def page_perception(doc_id: str, page_no: int) -> tuple[list[dict], list[dict]]:
-    """Deterministic (ocr_tokens, checkbox_matches) rows for one page.
+def page_perception(doc_id: str, page_no: int) -> tuple[list[dict], list[dict], list[dict]]:
+    """Deterministic (ocr_tokens, checkbox_matches, highlights) rows for one page.
 
     Token rows carry `tok_seq` (raw OCR emission order) and line identity
     (block, par, line). Match rows carry `seq` encoding the reference's

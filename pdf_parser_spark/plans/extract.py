@@ -7,8 +7,11 @@
         └── union ── repartition(doc_id) ── sortWithinPartitions ──▶
                      streaming mapInPandas assembly ──▶ out spans
 
-Exactly ONE shuffle (the doc_id repartition), moving opaque binary
-token payloads — never page pixels, never nested Arrow structs. The
+That is the paged plan. Besides the round-robin repartitions that
+balance the pages and the doc headers, its one keyed shuffle is the
+doc_id repartition, which moves opaque binary token payloads — never
+page pixels, never nested Arrow structs. The fused plan is one
+round-robin repartition of the doc rows and one narrow mapInPandas. The
 assembly is a sort-merge streaming group: rows of one doc arrive
 consecutively (header row page_no=0 carries the doc's input spans),
 so grouping is a plain Python loop with zero per-group pandas
@@ -43,16 +46,14 @@ from pdf_parser_spark.sources.documents import media_pages
 
 def _page_entry(pages, page_no):
     """page entry → (tokens, matches, highlights, media_ref). Payloads
-    are (tokens, matches) [legacy], (tokens, matches, highlights)
-    [synthetic], or (tokens, matches, highlights, media_ref) [native —
-    the ref lets the Q/A layer rebuild a NativePerception lazily]."""
+    are (tokens, matches, highlights) [synthetic] or (tokens, matches,
+    highlights, media_ref) [native — the ref lets the Q/A layer rebuild
+    a NativePerception lazily]."""
     entry = pages.get(page_no)
     if entry is None:
         return [], [], [], None
-    if len(entry) == 2:
-        return entry[0], entry[1], [], None
     if len(entry) == 3:
-        return entry[0], entry[1], entry[2], None
+        return (*entry, None)
     return entry
 
 
@@ -64,7 +65,7 @@ def extract_document(
 ) -> list[tuple[str, str, str, int]]:
     """One document: cross-page label + question bookkeeping, per-page
     geometry + Q/A layer, canonical span flattening.
-    ``pages``: page_no → (tokens, matches[, highlights[, media_ref]]).
+    ``pages``: page_no → (tokens, matches, highlights[, media_ref]).
     ``sections``: one schema, or {variant: schema} selected per doc by
     the page-1 gender keyword (S5/F15).
     ``envs``: page_no → PerceptionEnv for K5/K6; pages without one fall
@@ -201,6 +202,7 @@ def _as_dicts(cell) -> list[dict]:
 
 
 _OUT_COLS = ["doc_id", "kind", "text", "media_ref", "order"]
+SPAN_KINDS = ("text", "section", "checkbox", "question", "answer")
 
 
 def _pack_docs(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
@@ -312,15 +314,17 @@ def extract_spans(
     Two physical modes — a cost-based decode-placement choice (the
     UDF-stage analogue of Catalyst picking broadcast vs shuffle join):
 
-    - ``mode="fused"`` (default): decode + geometry + flattening in ONE
-      narrow mapInPandas over doc rows — ZERO shuffles, embarrassingly
-      parallel. Correct choice when per-page decode cost is small
-      relative to moving its output (synthetic decoder, pre-OCR'd
-      tokens, cached perception). Skew bounded by scan-split size and
-      the round-robin balance repartition.
+    - ``mode="fused"``: decode + geometry + flattening in ONE narrow
+      mapInPandas over doc rows, after one round-robin repartition that
+      balances the doc rows across ``parallelism`` tasks (the plan's
+      only exchange; no keyed shuffle). Correct choice when per-page
+      decode cost is small relative to moving its output (synthetic
+      decoder, pre-OCR'd tokens, cached perception). Skew bounded by
+      the round-robin balance.
     - ``mode="paged"``: page-granular decode stage (round-robin
-      balanced, so one 500-page doc fans out across tasks), then ONE
-      shuffle keyed by doc_id with opaque binary payloads, sorted
+      balanced, so one 500-page doc fans out across tasks; the doc
+      headers are round-robin repartitioned too), then ONE shuffle
+      keyed by doc_id with opaque binary payloads, sorted
       within partitions, and a streaming sort-merge assembly (no
       per-group pandas machinery). Correct choice when decode is the
       dominant cost (real rasterize+OCR kernels at 1-3 s/page) and a
@@ -380,11 +384,12 @@ def extract_spans_nested(out_flat: DataFrame) -> DataFrame:
 
 def lineage_metrics(docs: DataFrame, out_flat: DataFrame) -> DataFrame:
     """Per-doc lineage/metrics rows (replaces the reference's debug-image
-    side effects, SURVEY.md §2.1 S8/S9): span counts by kind per doc."""
+    side effects, SURVEY.md §2.1 S8/S9): span counts by kind per doc,
+    one conditional count per kind in a single aggregate (one exchange,
+    where a pivot plans two)."""
+    kind = F.col("kind")
     return (
         out_flat.groupBy("doc_id")
-        .pivot("kind", ["text", "section", "checkbox", "question", "answer"])
-        .count()
-        .na.fill(0)
+        .agg(*[F.count(F.when(kind == k, 1)).alias(k) for k in SPAN_KINDS])
         .join(docs.select("doc_id", F.size("spans").alias("n_input_spans")), "doc_id")
     )

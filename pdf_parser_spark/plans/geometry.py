@@ -5,9 +5,11 @@ perception rows and produces its ordered output spans. The algorithms
 re-express the reference's geometric passes (SURVEY.md §2.3-§2.7) with
 exact greedy/sequential parity — these passes are order-defined
 (used-box sets, claimed anchors, stable confidence sorts), so they must
-run as deterministic per-group sequential code (SURVEY.md §7.4.1); the
-commutative parts (NMS distance tests, row clustering) are vectorized
-with numpy. Relational window/join forms of the same operators live in
+run as deterministic per-group sequential code (SURVEY.md §7.4.1). Text
+matching goes through a per-page token index (:class:`PageView`): the
+IL1 fold of each token blocks every probe to its candidate words, and
+the exact flex matchers verify only those. Relational window/join forms
+of the same operators live in
 ``pdf_parser_spark.operators`` and serve as the driver's oracle-checked
 queries.
 
@@ -24,78 +26,89 @@ Reference provenance (behavior, not code):
 
 from __future__ import annotations
 
-import numpy as np
+from functools import lru_cache
 
 from pdf_parser_spark import config as C
 from pdf_parser_spark.functions.text import (
-    clean_label_sequence,
-    flex_contains,
-    flex_startswith,
+    KeyIndex,
+    clean_normalized_sequence,
+    expected_fold,
+    folded_contains,
+    folded_startswith,
+    il1_fold,
     normalize_text,
-    ocr_norm_preserve_punct_upper,
+    token_keys,
 )
 
 # ---------------------------------------------------------------------------
-# NMS dedupe — greedy by confidence desc (stable over emission order),
-# numpy-vectorized proximity test against the kept set.
+# NMS dedupe — greedy by confidence desc (stable over emission order)
+# against the kept set; coordinates compared as integers.
 # ---------------------------------------------------------------------------
 
 
 def nms_dedupe(matches: list[dict], max_dist: int = C.DEDUPE_MAX_DIST) -> list[dict]:
-    if not matches:
-        return []
     ms = sorted(matches, key=lambda m: m["seq"])
-    order = np.argsort([-m["score"] for m in ms], kind="stable")
-    xs = np.array([m["x"] for m in ms], dtype=np.int64)
-    ys = np.array([m["y"] for m in ms], dtype=np.int64)
-    kept_idx: list[int] = []
-    kx = np.empty(len(ms), dtype=np.int64)
-    ky = np.empty(len(ms), dtype=np.int64)
-    n_kept = 0
-    for i in order:
-        if n_kept and bool(
-            ((np.abs(kx[:n_kept] - xs[i]) < max_dist) & (np.abs(ky[:n_kept] - ys[i]) < max_dist)).any()
-        ):
+    ms.sort(key=lambda m: -m["score"])
+    kept: list[dict] = []
+    kept_xy: list[tuple[int, int]] = []
+    for m in ms:
+        x, y = int(m["x"]), int(m["y"])
+        if any(abs(kx - x) < max_dist and abs(ky - y) < max_dist for kx, ky in kept_xy):
             continue
-        kx[n_kept] = xs[i]
-        ky[n_kept] = ys[i]
-        n_kept += 1
-        kept_idx.append(int(i))
-    kept = [ms[i] for i in kept_idx]
+        kept_xy.append((x, y))
+        kept.append(m)
     kept.sort(key=lambda m: (m["y"], m["x"]))
     return kept
 
 
 # ---------------------------------------------------------------------------
-# Page view with precomputed normalization (perf: the reference
-# re-normalizes every token at every comparison; we normalize once).
+# Page token index: each token's normalized and IL1-folded keys are
+# read once per page (``token_keys``; the reference re-normalizes every
+# token at every comparison); every label and section probe goes
+# through its blocking indexes, and the exact flex check verifies only
+# the words they yield.
 # ---------------------------------------------------------------------------
 
 
 class PageView:
-    __slots__ = ("toks", "norm", "pnorm", "lines")
+    """One page's token index. ``toks`` (the non-blank tokens) and
+    ``norm`` (their F1 keys) keep emission order, for the exact label
+    scan; ``lines`` hold the same tokens grouped by line, each with its
+    words' F1 and F7 keys (``n``, ``p``) and their IL1 folds (``fn``,
+    ``fp``). ``exact`` blocks on F1 keys in emission order,
+    ``label_index`` on ``fn`` and ``section_index`` on ``fp``."""
+
+    __slots__ = ("toks", "norm", "lines", "exact", "label_index", "section_index")
 
     def __init__(self, tokens: list[dict]):
         # blank-token filter (P6)
         self.toks = [t for t in tokens if str(t["text"]).strip()]
-        self.norm = [normalize_text(t["text"]) for t in self.toks]
-        self.pnorm = [ocr_norm_preserve_punct_upper(t["text"]) for t in self.toks]
-        self.lines = build_lines(self.toks)
+        keys = [token_keys(t["text"]) for t in self.toks]
+        self.norm = [k[0] for k in keys]
+        self.lines = build_lines(self.toks, keys)
+        self.exact = KeyIndex([self.norm])
+        self.label_index = KeyIndex([ln["fn"] for ln in self.lines])
+        self.section_index = KeyIndex([ln["fp"] for ln in self.lines])
 
 
-def build_lines(toks: list[dict]) -> list[dict]:
+def build_lines(toks: list[dict], keys: list[tuple[str, str, str, str]]) -> list[dict]:
     """Group by (block, par, line) in first-seen order; line y = first
-    member's y; stable-sort lines by y."""
+    member's y; stable-sort lines by y. Each line carries its words'
+    keys (:func:`token_keys`) as ``n``, ``p``, ``fn``, ``fp``."""
     index: dict[tuple, dict] = {}
     lines: list[dict] = []
-    for t in toks:
+    for t, (n, p, fn, fp) in zip(toks, keys):
         key = (t["block"], t["par"], t["line"])
         ln = index.get(key)
         if ln is None:
-            ln = {"words": [], "y": t["y"]}
+            ln = {"words": [], "y": t["y"], "n": [], "p": [], "fn": [], "fp": []}
             index[key] = ln
             lines.append(ln)
         ln["words"].append(t)
+        ln["n"].append(n)
+        ln["p"].append(p)
+        ln["fn"].append(fn)
+        ln["fp"].append(fp)
     lines.sort(key=lambda ln: ln["y"])
     return lines
 
@@ -106,7 +119,7 @@ def next_page_head(next_tokens: list[dict], img_h: int, head_lines: int) -> list
     toks = [dict(t, y=t["y"] + img_h) for t in next_tokens if str(t["text"]).strip()]
     if not toks:
         return []
-    lines = build_lines(toks)
+    lines = build_lines(toks, [token_keys(t["text"]) for t in toks])
     kept: list[dict] = []
     groups = 0
     i = 0
@@ -124,55 +137,57 @@ def next_page_head(next_tokens: list[dict], img_h: int, head_lines: int) -> list
 # ---------------------------------------------------------------------------
 
 
-def _scan_exact(page: PageView, label: str) -> list[tuple[int, int]]:
+@lru_cache(maxsize=4096)
+def _label_ends(label: str) -> tuple[str, str, int]:
+    """F1 keys of a label's first and last words and its word count
+    (schema side, so memoized)."""
     words = label.split()
-    first_n, last_n = normalize_text(words[0]), normalize_text(words[-1])
-    max_len = len(words)
+    return normalize_text(words[0]), normalize_text(words[-1]), len(words)
+
+
+def _scan_exact(page: PageView, label: str) -> list[tuple[int, int]]:
+    first_n, last_n, max_len = _label_ends(label)
     toks, norm = page.toks, page.norm
     n = len(toks)
     hits: list[tuple[int, int]] = []
-    for i in range(n):
-        if first_n not in norm[i]:
-            continue
+    for i in page.exact.find(first_n).get(0, ()):
         for j in range(i, min(i + max_len, n)):
             if last_n not in norm[j]:
                 continue
-            seq_clean = clean_label_sequence([toks[k]["text"] for k in range(i, j + 1)])
-            if flex_contains(label, seq_clean):
+            seq_clean = clean_normalized_sequence(norm[i : j + 1])
+            if folded_contains(label, seq_clean, il1_fold(seq_clean)):
                 hits.append((toks[i]["x"], toks[i]["y"]))
     return hits
 
 
-def _match_run_in_line(words: list[dict], lbl_words: list[str], start_lbl: int) -> tuple[int | None, int]:
-    """Longest consecutive flex-contains run of lbl_words[start_lbl:]
-    starting anywhere in the line; returns (best_start_idx, run_len)."""
+def _match_run_in_line(line: dict, lbl_words: list[str], starts: list[int]) -> tuple[int | None, int]:
+    """Longest consecutive flex-contains run of lbl_words from one of
+    ``starts`` (the line's words that can match lbl_words[0]); returns
+    (best_start_idx, run_len)."""
+    n, fn = line["n"], line["fn"]
     best_start, best_run = None, 0
-    for si in range(len(words)):
+    for si in starts:
         run = 0
         k = si
-        while k < len(words) and start_lbl + run < len(lbl_words):
-            if flex_contains(lbl_words[start_lbl + run], normalize_text(words[k]["text"])):
-                run += 1
-                k += 1
-            else:
-                break
+        while k < len(n) and run < len(lbl_words) and folded_contains(lbl_words[run], n[k], fn[k]):
+            run += 1
+            k += 1
         if run > best_run:
             best_run, best_start = run, si
-        if start_lbl + run == len(lbl_words):
+        if run == len(lbl_words):
             break
     return best_start, best_run
 
 
-def _multiline_label(lines: list[dict], lbl_words: list[str]) -> tuple[int, int] | None:
+def _multiline_label(lines: list[dict], index: KeyIndex, lbl_words: list[str]) -> tuple[int, int] | None:
     """Wrapped-label matcher: start run on one line, continue the
     remaining words on up to 5 following lines within a 160px
-    x-tolerance (preferred) or anywhere (fallback)."""
+    x-tolerance (preferred) or anywhere (fallback). Only the lines
+    ``index`` finds a fold of lbl_words[0] in can start a run."""
     x_tol, max_ahead = C.LABEL_MULTILINE_BASE_X_TOLERANCE, C.LABEL_MULTILINE_MAX_LOOKAHEAD
-    for i, line in enumerate(lines):
-        words = line["words"]
-        if not words:
-            continue
-        start_idx, run = _match_run_in_line(words, lbl_words, 0)
+    for i, starts in index.find(expected_fold(lbl_words[0])).items():
+        words = lines[i]["words"]
+        start_idx, run = _match_run_in_line(lines[i], lbl_words, starts)
         if run == 0 or start_idx is None:
             continue
         start_x, start_y = words[start_idx]["x"], words[start_idx]["y"]
@@ -181,30 +196,26 @@ def _multiline_label(lines: list[dict], lbl_words: list[str]) -> tuple[int, int]
         while lbl_at < len(lbl_words) and ahead < max_ahead:
             if cur + 1 >= len(lines):
                 break
-            nxt = lines[cur + 1]["words"]
+            nxt_line = lines[cur + 1]
+            nxt, n, fn = nxt_line["words"], nxt_line["n"], nxt_line["fn"]
             if not nxt:
                 break
             want = lbl_words[lbl_at]
-            cands = [
-                k for k, tok in enumerate(nxt)
-                if abs(tok["x"] - x_ref) <= x_tol
-                and flex_contains(want, normalize_text(tok["text"]))
-            ] or [
-                k for k, tok in enumerate(nxt)
-                if flex_contains(want, normalize_text(tok["text"]))
-            ]
+            hit = [k for k in range(len(nxt)) if folded_contains(want, n[k], fn[k])]
+            cands = [k for k in hit if abs(nxt[k]["x"] - x_ref) <= x_tol] or hit
             if not cands:
                 break
             best_run, best_ci = 0, None
             for ci in cands:
                 run2 = 0
                 k = ci
-                while k < len(nxt) and lbl_at + run2 < len(lbl_words):
-                    if flex_contains(lbl_words[lbl_at + run2], normalize_text(nxt[k]["text"])):
-                        run2 += 1
-                        k += 1
-                    else:
-                        break
+                while (
+                    k < len(nxt)
+                    and lbl_at + run2 < len(lbl_words)
+                    and folded_contains(lbl_words[lbl_at + run2], n[k], fn[k])
+                ):
+                    run2 += 1
+                    k += 1
                 if run2 > best_run:
                     best_run, best_ci = run2, ci
             if best_run == 0:
@@ -218,14 +229,11 @@ def _multiline_label(lines: list[dict], lbl_words: list[str]) -> tuple[int, int]
     return None
 
 
-def _multiline_with_skips(lines: list[dict], lbl_words: list[str]) -> tuple[int, int] | None:
+def _multiline_with_skips(lines: list[dict], index: KeyIndex, lbl_words: list[str]) -> tuple[int, int] | None:
     """Leading-word OCR-noise fallback: retry dropping up to 4 leading
     words (reference extractor.py:504-510)."""
-    pos = _multiline_label(lines, lbl_words)
-    if pos is not None:
-        return pos
-    for skip in range(1, min(5, len(lbl_words))):
-        pos = _multiline_label(lines, lbl_words[skip:])
+    for skip in range(min(5, len(lbl_words))):
+        pos = _multiline_label(lines, index, lbl_words[skip:])
         if pos is not None:
             return pos
     return None
@@ -241,7 +249,7 @@ def find_label_positions(
     for lbl in labels:
         hits = _scan_exact(page, lbl)
         if not hits:
-            pos = _multiline_with_skips(page.lines, lbl.split())
+            pos = _multiline_with_skips(page.lines, page.label_index, lbl.split())
             if pos is not None:
                 hits = [pos]
         if hits:
@@ -250,8 +258,9 @@ def find_label_positions(
         pending = [lbl for lbl in labels if not positions.get(lbl)]
         if pending:
             ext = page.lines + next_page_head(next_page_tokens, img_h, C.NEXT_PAGE_HEAD_LINES)
+            ext_index = KeyIndex([ln["fn"] for ln in ext])
             for lbl in pending:
-                pos = _multiline_with_skips(ext, lbl.split())
+                pos = _multiline_with_skips(ext, ext_index, lbl.split())
                 if pos is not None:
                     positions[lbl] = [pos]
     return positions
@@ -262,25 +271,25 @@ def find_label_positions(
 # ---------------------------------------------------------------------------
 
 
-def _section_span_in_line(words: list[dict], name_words: list[str]) -> tuple[int | None, int]:
-    """Best (start_idx, matched_count) for a section header in one line:
-    a token whose cleaned text starts with the full concatenated header
+def _section_span_in_line(line: dict, name_words: list[str], starts: list[int]) -> tuple[int | None, int]:
+    """Best (start_idx, matched_count) for a section header in one line,
+    from one of ``starts`` (the words that can match name_words[0]): a
+    token whose cleaned text starts with the full concatenated header
     counts as a complete match (merged-token OCR); otherwise walk
     word-by-word — first word prefix-flex, rest contains-flex."""
     full = " ".join(name_words)
+    p, fp = line["p"], line["fp"]
     best_start, best_matched = None, 0
-    for si in range(len(words)):
-        tok0 = ocr_norm_preserve_punct_upper(words[si]["text"])
-        if flex_startswith(full, tok0):
+    for si in starts:
+        if folded_startswith(full, p[si], fp[si]):
             return si, len(name_words)
         matched = 0
         k = si
-        while k < len(words) and matched < len(name_words):
-            tok_c = ocr_norm_preserve_punct_upper(words[k]["text"])
+        while k < len(p) and matched < len(name_words):
             ok = (
-                flex_startswith(name_words[matched], tok_c)
+                folded_startswith(name_words[matched], p[k], fp[k])
                 if matched == 0
-                else flex_contains(name_words[matched], tok_c)
+                else folded_contains(name_words[matched], p[k], fp[k])
             )
             if not ok:
                 break
@@ -314,28 +323,23 @@ def _section_continue(lines: list[dict], i0: int, start_idx: int, name_words: li
         want = name_words[lbl_at]
         best_run, best_li, best_ci = 0, None, None
         for li in sibs:
-            toks = lines[li]["words"]
+            toks, p, fp = lines[li]["words"], lines[li]["p"], lines[li]["fp"]
             if not toks:
                 continue
+            near = [k for k in range(len(toks)) if abs(toks[k]["x"] - x_ref) <= x_tol]
             cands = (
-                [k for k, t in enumerate(toks)
-                 if abs(t["x"] - x_ref) <= x_tol
-                 and flex_startswith(want, ocr_norm_preserve_punct_upper(t["text"]))]
-                or [k for k, t in enumerate(toks)
-                    if flex_startswith(want, ocr_norm_preserve_punct_upper(t["text"]))]
-                or [k for k, t in enumerate(toks)
-                    if abs(t["x"] - x_ref) <= x_tol
-                    and flex_contains(want, ocr_norm_preserve_punct_upper(t["text"]))]
+                [k for k in near if folded_startswith(want, p[k], fp[k])]
+                or [k for k in range(len(toks)) if folded_startswith(want, p[k], fp[k])]
+                or [k for k in near if folded_contains(want, p[k], fp[k])]
             )
             for ci in cands:
                 run = 0
                 k = ci
                 while k < len(toks) and lbl_at + run < len(name_words):
-                    tok_c = ocr_norm_preserve_punct_upper(toks[k]["text"])
                     ok = (
-                        flex_startswith(name_words[lbl_at + run], tok_c)
+                        folded_startswith(name_words[lbl_at + run], p[k], fp[k])
                         if run == 0
-                        else flex_contains(name_words[lbl_at + run], tok_c)
+                        else folded_contains(name_words[lbl_at + run], p[k], fp[k])
                     )
                     if not ok:
                         break
@@ -360,9 +364,11 @@ def find_section_regions(
 ) -> dict[str, dict]:
     """Anchor each section header (claimed-anchor priority J8: earlier
     schema rank wins a y) then grow the region down over the checkbox-y
-    chain while gaps stay ≤100px (W2), +50px bottom buffer."""
+    chain while gaps stay ≤100px (W2), +50px bottom buffer. Only lines
+    with a word whose fold starts with the first header word's fold
+    can anchor."""
     x_threshold = int(C.ANCHOR_X_FRACTION * img_w)
-    cb_ys = np.sort(np.array([cb["y"] for cb in checkboxes], dtype=np.int64))
+    cb_ys = sorted(int(cb["y"]) for cb in checkboxes)
     regions: dict[str, dict] = {}
     claimed: set[int] = set()
 
@@ -371,11 +377,9 @@ def find_section_regions(
         if not name_words:
             continue
         best = None  # (matched, y, x) — max wins
-        for i, line in enumerate(page.lines):
-            words = line["words"]
-            if not words:
-                continue
-            start_idx, matched = _section_span_in_line(words, name_words)
+        for i, starts in page.section_index.find(expected_fold(name_words[0]), prefix=True).items():
+            words = page.lines[i]["words"]
+            start_idx, matched = _section_span_in_line(page.lines[i], name_words, starts)
             if not matched or start_idx is None:
                 continue
             sx, sy = int(words[start_idx]["x"]), int(words[start_idx]["y"])
@@ -397,11 +401,13 @@ def find_section_regions(
 
         # region growth: chained gap ≤100 over checkbox ys ≥ anchor
         y2 = anchor_y
-        after = cb_ys[cb_ys >= anchor_y]
-        if len(after):
-            gaps = np.diff(after)
-            stop = int(np.argmax(gaps > C.SECTION_CB_MAX_GAP_PX)) if (gaps > C.SECTION_CB_MAX_GAP_PX).any() else len(after) - 1
-            y2 = int(after[stop])
+        after = [y for y in cb_ys if y >= anchor_y]
+        if after:
+            y2 = after[-1]
+            for a, b in zip(after, after[1:]):
+                if b - a > C.SECTION_CB_MAX_GAP_PX:
+                    y2 = a
+                    break
         regions[sec["section_name"]] = {
             "x1": C.SECTION_X1,
             "y1": anchor_y,
@@ -412,27 +418,29 @@ def find_section_regions(
 
 
 # ---------------------------------------------------------------------------
-# Row clustering (W1, vectorized) + greedy assignment (J3)
+# Row clustering (W1) + greedy assignment (J3), in plain Python: a
+# section holds a handful of boxes, too few for array calls to pay.
 # ---------------------------------------------------------------------------
 
 
-def cluster_rows(boxes: list[dict], gap: int = C.LABEL_ROW_GAP_PX) -> tuple[np.ndarray, np.ndarray]:
-    """Sessionize boxes by y-gap>50: returns (row_id per box in y-sorted
-    order, row centroid y per row). The lag/cumsum idiom, in numpy."""
-    if not boxes:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    ys = np.array([b["y"] for b in boxes], dtype=np.int64)
-    order = np.argsort(ys, kind="stable")
-    sy = ys[order]
-    brk = np.zeros(len(sy), dtype=np.int64)
-    if len(sy) > 1:
-        brk[1:] = (np.abs(np.diff(sy)) > gap).astype(np.int64)
-    row_id_sorted = np.cumsum(brk)
-    row_id = np.empty(len(sy), dtype=np.int64)
-    row_id[order] = row_id_sorted
-    n_rows = int(row_id_sorted[-1]) + 1
-    centroids = np.array([sy[row_id_sorted == r].mean() for r in range(n_rows)])
-    return row_id, centroids
+def cluster_rows(boxes: list[dict], gap: int = C.LABEL_ROW_GAP_PX) -> tuple[list[int], list[float]]:
+    """Sessionize boxes by y-gap>50 in stable y order: returns (row_id
+    per box, in input order; row centroid y per row)."""
+    ys = [int(b["y"]) for b in boxes]
+    row_id = [0] * len(ys)
+    sums: list[int] = []
+    counts: list[int] = []
+    prev = None
+    for i in sorted(range(len(ys)), key=ys.__getitem__):
+        y = ys[i]
+        if prev is None or y - prev > gap:
+            sums.append(0)
+            counts.append(0)
+        row_id[i] = len(sums) - 1
+        sums[-1] += y
+        counts[-1] += 1
+        prev = y
+    return row_id, [s / c for s, c in zip(sums, counts)]
 
 
 def assign_checkboxes(
@@ -442,9 +450,9 @@ def assign_checkboxes(
     regions: dict[str, dict],
 ) -> list[dict]:
     """Greedy one-to-one label→checkbox assignment per section (J3):
-    nearest box by L1 distance, row-centroid Δy ≤ 60 constraint,
-    used-box exclusion across sections; unmatched labels → 'missing';
-    sections with no real hit are pruned (P9)."""
+    nearest box by L1 distance (first box on ties), row-centroid
+    Δy ≤ 60 constraint, used-box exclusion across sections; unmatched
+    labels → 'missing'; sections with no real hit are pruned (P9)."""
     out: list[dict] = []
     used: set[int] = set()
     for sec in sections:
@@ -457,18 +465,17 @@ def assign_checkboxes(
             (bi, b) for bi, b in enumerate(checkboxes) if region["y1"] <= b["y"] <= region["y2"]
         ]
         row_id, centroids = cluster_rows([b for _, b in sec_boxes])
-        bx = np.array([b["x"] for _, b in sec_boxes], dtype=np.int64)
-        by = np.array([b["y"] for _, b in sec_boxes], dtype=np.int64)
+        bxy = [(int(b["x"]), int(b["y"])) for _, b in sec_boxes]
         rows: list[dict] = []
         for lbl in sec.get("labels") or []:
             assigned = None
             for lx, ly in label_positions.get(lbl, []):
                 if not (y1_eff <= ly <= region["y2"]):
                     continue
-                if not len(bx):
+                if not bxy:
                     continue
-                dist = np.abs(by - ly) + np.abs(bx - lx)
-                bi_local = int(np.argmin(dist))
+                dist = [abs(by - ly) + abs(bx - lx) for bx, by in bxy]
+                bi_local = dist.index(min(dist))
                 if abs(centroids[row_id[bi_local]] - ly) > C.LABEL_CB_ASSIGN_MAX_DELTA_Y:
                     continue
                 gi = sec_boxes[bi_local][0]

@@ -6,10 +6,16 @@ pipeline. Independent implementation checked span-for-span against the
 transcription oracle in ``pdf_parser_spark.oracle.response_oracle``;
 reference provenance is cited there.
 
-Perf posture: token normalization is computed once per page (the
-reference re-normalizes per comparison); flex matchers are memoized in
-``functions.text``. Per-page cost is what multiplies by 10^12 docs —
-this kernel is the throughput hot path after decode.
+Perf posture: each page view (:class:`QAPage`) is a token index. Its
+words carry their F7 key and the key's IL1 fold (``functions.text.
+token_keys``, the reference re-normalizes per comparison), and a
+:class:`~pdf_parser_spark.functions.text.KeyIndex` over the folds
+blocks every question probe to the words whose fold starts with the
+fold of the question's first word; the exact flex matchers verify only
+those. The page view is built once per page, each crop view once per
+crop band, and the next page's head lines once per page. Per-page cost
+is what multiplies by 10^12 docs — this kernel is the throughput hot
+path after decode.
 """
 
 from __future__ import annotations
@@ -19,9 +25,12 @@ import re
 from pdf_parser_spark import config as C
 from pdf_parser_spark.sources.perception import SyntheticPerception
 from pdf_parser_spark.functions.text import (
-    flex_contains,
+    KeyIndex,
+    expected_fold,
     flex_startswith,
-    ocr_norm_preserve_punct_upper as pnorm,
+    folded_contains,
+    folded_startswith,
+    token_keys,
 )
 
 A_COL_GAP = 5
@@ -36,36 +45,57 @@ _ZIP_RE = re.compile(r"^\d{5}(-\d{4})?$")
 
 
 class QAPage:
-    """Matcher + answer line views of one page's tokens, built once."""
+    """Matcher and answer line views of one page's tokens, each built
+    once; the answer view only when it is first read (crop and
+    next-page views never read it). Matcher words carry their F7 key
+    ``pn`` and its IL1 fold ``fp``; ``index`` blocks question probes on
+    ``fp``."""
 
-    __slots__ = ("m_lines", "a_lines")
+    __slots__ = ("tokens", "m_lines", "index", "_a_lines")
 
     def __init__(self, tokens: list[dict]):
+        self.tokens = tokens
+        self._a_lines = None
         m: dict[tuple, dict] = {}
-        a: dict[tuple, dict] = {}
-        m_order: list[tuple] = []
-        a_order: list[tuple] = []
         for t in tokens:
             word = str(t["text"]).strip()
-            key = (t["block"], t["par"], t["line"])
-            if key not in a:
-                a[key] = {"words": [], "y": int(t["y"]), "h": int(t["h"])}
-                a_order.append(key)
             if not word:
                 continue
+            _, pn, _, fp = token_keys(word)
             tok = {"text": word, "x": int(t["x"]), "y": int(t["y"]),
-                   "w": int(t["w"]), "h": int(t["h"]), "pn": pnorm(word)}
-            a[key]["words"].append(tok)
-            a[key]["h"] = max(a[key]["h"], tok["h"])
-            if key not in m:
-                m[key] = {"words": [], "y": tok["y"]}
-                m_order.append(key)
-            m[key]["words"].append(tok)
-        self.m_lines = [m[k] for k in m_order]
+                   "w": int(t["w"]), "h": int(t["h"]), "pn": pn, "fp": fp}
+            key = (t["block"], t["par"], t["line"])
+            ln = m.get(key)
+            if ln is None:
+                ln = m[key] = {"words": [], "y": tok["y"]}
+            ln["words"].append(tok)
+        self.m_lines = sorted(m.values(), key=lambda ln: ln["y"])
         for ln in self.m_lines:
             ln["words"].sort(key=lambda w: w["x"])
-        self.m_lines.sort(key=lambda ln: ln["y"])
-        self.a_lines = sorted((a[k] for k in a_order), key=lambda ln: ln["y"])
+        self.index = line_index(self.m_lines)
+
+    @property
+    def a_lines(self) -> list[dict]:
+        """Answer lines: every (block, par, line) group, blank-only ones
+        included, words in emission order; ``h`` is the tallest of the
+        group's first token and its words."""
+        if self._a_lines is None:
+            a: dict[tuple, dict] = {}
+            for t in self.tokens:
+                key = (t["block"], t["par"], t["line"])
+                ln = a.get(key)
+                if ln is None:
+                    ln = a[key] = {"words": [], "y": int(t["y"]), "h": int(t["h"])}
+                word = str(t["text"]).strip()
+                if word:
+                    ln["words"].append({"text": word, "x": int(t["x"])})
+                    ln["h"] = max(ln["h"], int(t["h"]))
+            self._a_lines = sorted(a.values(), key=lambda ln: ln["y"])
+        return self._a_lines
+
+
+def line_index(lines: list[dict]) -> KeyIndex:
+    return KeyIndex([[w["fp"] for w in ln["words"]] for ln in lines])
 
 
 def _seg(tokens: list[dict], count: int) -> dict:
@@ -78,11 +108,21 @@ def _seg(tokens: list[dict], count: int) -> dict:
     }
 
 
-def _full_matches_in_line(words: list[dict], q_words: list[str], q_full: str) -> list[dict]:
+def _sw(expected: str, w: dict) -> bool:
+    return folded_startswith(expected, w["pn"], w["fp"])
+
+
+def _ct(expected: str, w: dict) -> bool:
+    return folded_contains(expected, w["pn"], w["fp"])
+
+
+def _full_matches_in_line(words: list[dict], q_words: list[str], q_full: str, starts: list[int]) -> list[dict]:
+    """Same-line full matches from each of ``starts`` (the words that
+    flex-start with q_words[0]; no other word can start a match)."""
     segs = []
     nq = len(q_words)
-    for si in range(len(words)):
-        if flex_startswith(q_full, words[si]["pn"]):
+    for si in starts:
+        if _sw(q_full, words[si]):
             segs.append(_seg([words[si]], nq))
             continue
         run = 0
@@ -91,11 +131,7 @@ def _full_matches_in_line(words: list[dict], q_words: list[str], q_full: str) ->
             if k >= len(words):
                 run = 0
                 break
-            ok = (
-                flex_startswith(q_words[run], words[k]["pn"])
-                if run == 0
-                else flex_contains(q_words[run], words[k]["pn"])
-            )
+            ok = _sw(q_words[run], words[k]) if run == 0 else _ct(q_words[run], words[k])
             if not ok:
                 run = 0
                 break
@@ -106,19 +142,15 @@ def _full_matches_in_line(words: list[dict], q_words: list[str], q_full: str) ->
     return segs
 
 
-def _best_run_in_line(words: list[dict], q_words: list[str], q_full: str):
+def _best_run_in_line(words: list[dict], q_words: list[str], q_full: str, starts: list[int]):
     best_start, best_run = None, 0
-    for si in range(len(words)):
-        if flex_startswith(q_full, words[si]["pn"]):
+    for si in starts:
+        if _sw(q_full, words[si]):
             return si, len(q_words)
         run = 0
         k = si
         while k < len(words) and run < len(q_words):
-            ok = (
-                flex_startswith(q_words[run], words[k]["pn"])
-                if run == 0
-                else flex_contains(q_words[run], words[k]["pn"])
-            )
+            ok = _sw(q_words[run], words[k]) if run == 0 else _ct(q_words[run], words[k])
             if not ok:
                 break
             run += 1
@@ -130,13 +162,14 @@ def _best_run_in_line(words: list[dict], q_words: list[str], q_full: str):
     return best_start, best_run
 
 
-def _multiline_hit(lines: list[dict], q_words: list[str], q_full: str):
+def _multiline_hit(lines: list[dict], q_words: list[str], q_full: str, starts: dict[int, list[int]]):
+    """One wrapped-question hit, starting on one of the lines in
+    ``starts`` (line → words that flex-start with q_words[0])."""
     x_tol, max_ahead = C.LABEL_MULTILINE_BASE_X_TOLERANCE, C.LABEL_MULTILINE_MAX_LOOKAHEAD
-    for i, line in enumerate(lines):
+    for i, line_starts in starts.items():
+        line = lines[i]
         words = line["words"]
-        if not words:
-            continue
-        start_idx, run = _best_run_in_line(words, q_words, q_full)
+        start_idx, run = _best_run_in_line(words, q_words, q_full, line_starts)
         if run == 0:
             continue
         start_x, start_y = words[start_idx]["x"], words[start_idx]["y"]
@@ -168,15 +201,12 @@ def _multiline_hit(lines: list[dict], q_words: list[str], q_full: str):
                 toks = lines[li]["words"]
                 if not toks:
                     continue
-                cands = [
-                    k for k, t in enumerate(toks)
-                    if abs(t["x"] - x_ref) <= x_tol and flex_startswith(want, t["pn"])
-                ] or [
-                    k for k, t in enumerate(toks) if flex_startswith(want, t["pn"])
-                ] or [
-                    k for k, t in enumerate(toks)
-                    if abs(t["x"] - x_ref) <= x_tol and flex_contains(want, t["pn"])
-                ]
+                near = [k for k, t in enumerate(toks) if abs(t["x"] - x_ref) <= x_tol]
+                cands = (
+                    [k for k in near if _sw(want, toks[k])]
+                    or [k for k, t in enumerate(toks) if _sw(want, t)]
+                    or [k for k in near if _ct(want, toks[k])]
+                )
                 if not cands:
                     continue
                 line_best, line_start = 0, None
@@ -185,9 +215,9 @@ def _multiline_hit(lines: list[dict], q_words: list[str], q_full: str):
                     k2 = ci
                     while k2 < len(toks) and lbl_at + run2 < len(q_words):
                         ok2 = (
-                            flex_startswith(q_words[lbl_at + run2], toks[k2]["pn"])
+                            _sw(q_words[lbl_at + run2], toks[k2])
                             if run2 == 0
-                            else flex_contains(q_words[lbl_at + run2], toks[k2]["pn"])
+                            else _ct(q_words[lbl_at + run2], toks[k2])
                         )
                         if not ok2:
                             break
@@ -232,10 +262,12 @@ def _head_lines(next_tokens: list[dict], img_h: int, k: int) -> list[dict]:
 
 
 def find_question_hits(
-    lines: list[dict], questions: list[str]
+    lines: list[dict], index: KeyIndex, questions: list[str]
 ) -> dict[str, list[dict]]:
     """Pass 1 (all same-line full matches, deduped by start) + pass 2
-    (one multiline hit) per unique question text."""
+    (one multiline hit) per unique question text. ``index`` blocks on
+    the words' folds: every hit starts at a word that flex-starts with
+    the first question word, so only those words are scanned."""
     results: dict[str, list[dict]] = {}
     seen_q: set[str] = set()
     for q in questions:
@@ -246,24 +278,25 @@ def find_question_hits(
         if not q_words:
             continue
         q_full = " ".join(q_words)
-        # exact prefilter: any hit (same-line, merged-token, or
-        # multiline start) requires a token flex-startswith the first
-        # question word — skip scanning when no token qualifies
         first = q_words[0]
-        if not any(
-            flex_startswith(first, w["pn"]) for line in lines for w in line["words"]
-        ):
+        starts: dict[int, list[int]] = {}
+        for li, cands in index.find(expected_fold(first), prefix=True).items():
+            words = lines[li]["words"]
+            ok = [k for k in cands if flex_startswith(first, words[k]["pn"])]
+            if ok:
+                starts[li] = ok
+        if not starts:
             continue
         hits = []
         seen_starts = set()
-        for line in lines:
-            for seg in _full_matches_in_line(line["words"], q_words, q_full):
+        for li, line_starts in starts.items():
+            for seg in _full_matches_in_line(lines[li]["words"], q_words, q_full, line_starts):
                 key = (int(seg["start_x"]), int(seg["line_y"]))
                 if key in seen_starts:
                     continue
                 seen_starts.add(key)
                 hits.append({"x": key[0], "y": key[1], "segments": [seg]})
-        ml = _multiline_hit(lines, q_words, q_full)
+        ml = _multiline_hit(lines, q_words, q_full, starts)
         if ml is not None and (ml["x"], ml["y"]) not in seen_starts:
             hits.append(ml)
         if hits:
@@ -311,13 +344,24 @@ def match_question_sections(
             crop_views[key] = view
         return view
 
+    # the next page's head lines, joined to this page's lines, are the
+    # last resort of every question still missing: build them once
+    ext = None  # (lines, index)
+
+    def ext_hits(q: str) -> list[dict]:
+        nonlocal ext
+        if ext is None:
+            lines = page.m_lines + _head_lines(next_page_tokens, img_h, C.NEXT_PAGE_HEAD_LINES)
+            ext = (lines, line_index(lines))
+        return find_question_hits(*ext, [q]).get(q, [])
+
     out = []
     for sec in sections:
         name = sec["section_name"]
         qs = sec.get("questions") or []
         if not qs:
             continue
-        qhits = find_question_hits(page.m_lines, qs)
+        qhits = find_question_hits(page.m_lines, page.index, qs)
         yband = bands.get(name)
         anchor_y = anchors.get(name)
         min_start = int(anchor_y) + C.ANCHOR_OFFSET_PX if anchor_y is not None else None
@@ -336,7 +380,8 @@ def match_question_sections(
                 y2c_primary = max(y1c + 1, int(min(img_h, yband[1])))
 
                 def crop_hits(y2c):
-                    found = find_question_hits(crop_view(y1c, y2c).m_lines, [q]).get(q, [])
+                    view = crop_view(y1c, y2c)
+                    found = find_question_hits(view.m_lines, view.index, [q]).get(q, [])
                     res = []
                     for h in found:
                         h["y"] += y1c
@@ -354,8 +399,7 @@ def match_question_sections(
                     if y2c_wide > y2c_primary:
                         hits = crop_hits(y2c_wide)
             if not hits and next_page_tokens is not None:
-                ext = page.m_lines + _head_lines(next_page_tokens, img_h, C.NEXT_PAGE_HEAD_LINES)
-                hits = [h for h in find_question_hits(ext, [q]).get(q, []) if in_band(h)]
+                hits = [h for h in ext_hits(q) if in_band(h)]
             if not hits:
                 continue
             taken = claimed.setdefault(q, set())

@@ -16,7 +16,7 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pytest
 
@@ -156,9 +156,10 @@ def test_compact_line_fits_driver_tail_window():
     record's final line stays under the 1,800-byte budget (driver
     window is 2,000), with the bulk spilled to the detail record."""
     rec = _worst_case_record()
-    line, detail = bench._compact_line(rec, "BENCH/record_r05.json")
+    line, compact, detail = bench._compact_line(rec, "BENCH/record_r05.json")
     assert len(line) < bench.MAX_LINE_BYTES, f"{len(line)} bytes"
     parsed = json.loads(line)
+    assert parsed == compact
     # the contract fields ride on the line
     assert parsed["queries"] == rec["queries"]
     assert parsed["docs_per_sec"] == rec["docs_per_sec"]

@@ -10,9 +10,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
 README = os.path.join(HERE, "..", "README.md")
 
 

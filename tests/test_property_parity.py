@@ -19,6 +19,10 @@ VOCAB = [
     "PATIENT", "MEDICAL", "HISTORY", "PATIENTMEDICAL", "Pat1ent",
     "First", "Name", "FirstName", "Relationship", "Relat1onship",
     "a", "I", "l", "1", "-", "/", "Sulfa", "Drugs", "Sulfa/Drugs",
+    # non-ASCII IL1 confusables: dotless i, fullwidth L/I, a decomposing
+    # dotted I, a combining mark, a two-char upper case (ß → SS)
+    "L\u0131ver", "\uff2civer", "D\u0131abetes", "\u0130odine", "Da\uff29ly",
+    "He\u0301art", "Exerci\u00dfe", "Re\u0131at\u0131onsh\u0131p",
 ]
 
 SECTIONS = [

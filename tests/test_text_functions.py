@@ -5,6 +5,8 @@ Expectations hand-derived from the reference semantics
 
 import re
 
+from hypothesis import given, settings, strategies as st
+
 from pdf_parser_spark.functions import text as T
 
 
@@ -55,6 +57,67 @@ def test_flex_regex_matches_python_form():
         assert bool(re.match(pat_s, cand)) == T.flex_startswith(expected, cand)
         pat_c = T.flex_regex(expected, "none")
         assert bool(re.search(pat_c, cand)) == T.flex_contains(expected, cand)
+
+
+# IL1 confusables (ASCII, dotless i, fullwidth L), a char whose upper
+# case is two chars (ß), a combining mark, and the separators F3 drops
+_FOLD_ALPHABET = ["I", "L", "l", "1", "i", "\u0131", "\uff2c", "\u00df", "\u0301", "/", "-", " ", "A", "s"]
+_CONFUSE = {"I": "l", "l": "I", "1": "L", "L": "1", "i": "I", "\u0131": "I", "\u00df": "SS"}
+
+
+@st.composite
+def _needle_haystack(draw):
+    """(expected, haystack) where expected is usually a confused copy
+    of a slice of haystack, so flex matches are common."""
+    chars = st.sampled_from(_FOLD_ALPHABET)
+    h = "".join(draw(st.lists(chars, max_size=12)))
+    if draw(st.integers(0, 3)) == 0:
+        return "".join(draw(st.lists(chars, max_size=4))), h
+    i = draw(st.integers(0, len(h)))
+    j = draw(st.integers(i, len(h)))
+    e = "".join(_CONFUSE.get(c, c) if draw(st.booleans()) else c for c in h[i:j])
+    return e, h
+
+
+@settings(max_examples=200, deadline=None)
+@given(_needle_haystack())
+def test_il1_fold_prefilter_is_superset(pair):
+    """The token index's blocking keys never drop a flex match, and the
+    folded matchers (fold prefilter, flex verify) equal F5/F6."""
+    e, h = pair
+    f, fh = T.il1_fold(T.expected_masked(e)[0]), T.il1_fold(h)
+    assert f == T.expected_fold(e) and len(fh) == len(h)
+    if T.flex_contains(e, h):
+        assert f in fh
+    if T.flex_startswith(e, h):
+        assert fh.startswith(f)
+    assert T.folded_contains(e, h, fh) == T.flex_contains(e, h)
+    assert T.folded_startswith(e, h, fh) == T.flex_startswith(e, h)
+
+
+def test_il1_fold_is_coarser_than_flex_equal():
+    # the fold maps a lowercase or dotless i to 'I'; F4 accepts neither
+    # for an expected 'I', so only the flex check may decide
+    for c in ("i", "\u0131"):
+        assert T.il1_fold(c) == "I" and not T.flex_equal("I", c)
+    assert T.il1_fold("l1L\u00df") == "III\x00"
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(st.lists(st.text(alphabet="ILA", max_size=3), max_size=4), max_size=5),
+    st.text(alphabet="ILA", max_size=2),
+)
+def test_key_index_find_equals_scan(rows, needle):
+    idx = T.KeyIndex(rows)
+    for prefix in (False, True):
+        want = {}
+        for r, keys in enumerate(rows):
+            hits = [k for k, key in enumerate(keys) if (key.startswith(needle) if prefix else needle in key)]
+            if hits:
+                want[r] = hits
+        got = idx.find(needle, prefix)
+        assert got == want and list(got) == sorted(got)
 
 
 def test_oracle_and_engine_normalizers_agree():
