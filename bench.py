@@ -2,26 +2,42 @@
 
 Runs the flagship extraction pipeline plus representative operator
 queries at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on) and prints ONE JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ...,
-     "docs_per_sec": ..., "n_docs": ...}
+     "queries": {name: sec, ...}, "sf": ..., "cpus": ...,
+     "timing_method": "best_of_2", "docs_per_sec": ..., "n_docs": ...,
+     "detail_file": "BENCH/record_r{N}.json"}
 
-Each query is forced to full materialization with the noop sink (no
-driver-side collect cost). Extraction throughput (documents/sec — the
-north-rule metric) is derived from the extraction query's timing.
+There is one timing path. After a warm-up, every headline query runs
+twice in the same session, each run forced to full materialization
+with the noop sink (no driver-side collect cost), and the faster run
+is recorded with the hypervisor CPU steal sampled around it. No query
+gets extra runs, so every number in a record means the same thing.
+Extraction throughput (documents/sec, the north-rule metric) is
+derived from the extraction query's timing.
+
+Per-query deltas are taken against the newest driver round record
+(``BENCH_r{N}.json``) whose line parsed, and only when sf, cpus and
+timing method all match; queries slower by >10% are flagged. Deltas,
+flags and steal samples spill to the detail file so the line stays
+under the driver's 2,000-byte tail capture.
+
+Usage: python bench.py [--sf-dir DIR] [--cpus N]
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.procfs import cpu_counters, steal_pct  # noqa: E402
 
 HEADLINE = [
     "x1_extract_spans",
@@ -38,25 +54,19 @@ HEADLINE = [
     "h1_main_content",
 ]
 
+TIMED_RUNS = 2
 
-def run_bench(
-    sf_dir: str, cpus: int, names: list[str] | None = None, raw: bool = False
-) -> dict:
-    """Time the headline suite. ``raw=True`` is the fresh-subprocess
-    mode: time ``names`` min-of-2 and return ``{"queries", "steal_pct"}``
-    only — no regression adjudication (which would recurse), no scaling
-    block, no detail spill."""
+
+def run_bench(sf_dir: str, cpus: int) -> dict:
+    """Time the headline suite best-of-2 and return the full record."""
     import __spark_entry__ as E
+    from pdf_parser_spark.operators.dedup import release_shingle_caches
     from pdf_parser_spark.session import get_spark
 
-    spark_ref = {"s": get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)}
-    spark = spark_ref["s"]
+    spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
 
-    headline = names or HEADLINE
     # warm-up: spin up executor threads + the Python UDF worker pool so
     # timings measure steady-state throughput, not process startup
-    import pandas as pd
-
     warm = spark.range(0, cpus * 4, 1, cpus)
     warm.mapInPandas(lambda it: (pdf for pdf in it), schema="id long").write.format(
         "noop"
@@ -64,91 +74,31 @@ def run_bench(
 
     qs = E.queries()
 
-    def time_query(name: str, runs: int) -> tuple[float, float | None]:
-        # min-of-N: this host shows 20-30% hypervisor CPU-steal spikes
-        # (documented in BENCH/BASELINE.md); a single cold run can read
-        # 2-3x its steady-state time. The first run also pays plan
-        # compilation + codegen; the min measures throughput.
+    def time_query(name: str) -> tuple[float, float]:
+        # best-of-2: the first run also pays plan compilation + codegen,
+        # and this host shows hypervisor CPU-steal spikes; the min
+        # measures throughput
         best, best_steal = None, None
-        for _ in range(runs):
-            s0 = _cpu_steal_counters()
+        for _ in range(TIMED_RUNS):
+            s0 = cpu_counters()
             t0 = time.time()
-            df = qs[name](spark_ref["s"], sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             sec = time.time() - t0
-            steal_pct = _steal_pct(s0, _cpu_steal_counters())
             if best is None or sec < best:
-                best, best_steal = sec, steal_pct
+                best, best_steal = sec, round(steal_pct(s0, cpu_counters()), 1)
             # release operator-held caches (d2/d3 shingle projections)
             # so repeated invocations don't accumulate pinned storage
-            from pdf_parser_spark.operators.dedup import release_shingle_caches
-
             release_shingle_caches()
         return best, best_steal
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf) if sf.replace(".", "").isdigit() else sf
-    cfg = {"sf": sf, "cpus": cpus, "timing_method": "best_of_2"}
+    cfg = {"sf": sf, "cpus": cpus, "timing_method": f"best_of_{TIMED_RUNS}"}
     timings: dict[str, float] = {}
     steal: dict[str, float] = {}
-    for name in headline:
-        best, best_steal = time_query(name, 2)
+    for name in HEADLINE:
+        best, steal[name] = time_query(name)
         timings[name] = round(best, 3)
-        if best_steal is not None:
-            steal[name] = best_steal
-
-    if raw:
-        spark_ref["s"].stop()
-        return {"queries": timings, "steal_pct": steal}
-
-    # self-adjudicating re-measure: a co-tenant burst during the suite
-    # produces spurious >10% regression flags whose steal sample (it
-    # covers only the best run's window) can still read ~0 (round-3
-    # BENCH/BASELINE.md documents a ±3x run envelope even at low
-    # sampled steal). Any flagged query gets 3 more runs before the
-    # record is written; a REAL plan regression survives min-of-5,
-    # noise doesn't.
-    remeasured: dict[str, int] = {}
-    flagged = [
-        r["name"]
-        for r in _deltas_vs_prev(timings, steal, cfg=cfg).get("regressions", [])
-        if r["name"] in timings
-    ]
-    for name in flagged:
-        best, best_steal = time_query(name, 3)
-        if round(best, 3) < timings[name]:
-            timings[name] = round(best, 3)
-            if best_steal is not None:
-                steal[name] = best_steal
-        remeasured[name] = 5
-
-    # fresh-PROCESS adjudication: a query still flagged after min-of-5
-    # in the ORIGINAL session may be paying accumulated executor state
-    # (GC pressure, Python worker churn, storage fragmentation from 10
-    # earlier queries), not a plan regression. Round-4 VERDICT: the old
-    # in-process "fresh JVM" (spark.stop() + getOrCreate) was NOT fresh
-    # — the py4j gateway JVM survives SparkContext restarts in local
-    # mode, so it measured accumulated heap/worker state and kept
-    # 29-64% phantom regressions that genuinely standalone runs did not
-    # reproduce. Re-exec the survivors in a SUBPROCESS (its own JVM);
-    # a REAL plan regression reproduces there too.
-    still = [
-        r["name"]
-        for r in _deltas_vs_prev(timings, steal, cfg=cfg).get("regressions", [])
-        if r["name"] in timings
-    ]
-    fresh_proc: list[str] = []
-    if still:
-        fresh = _fresh_process_retime(still, sf_dir, cpus)
-        if fresh is not None:
-            for name, sec in fresh.get("queries", {}).items():
-                if name in timings and sec < timings[name]:
-                    timings[name] = sec
-                    if fresh.get("steal_pct", {}).get(name) is not None:
-                        steal[name] = fresh["steal_pct"][name]
-                remeasured[name] = remeasured.get(name, 5) + 2
-                fresh_proc.append(name)
-    spark = spark_ref["s"]
 
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     extract_sec = timings.get("x1_extract_spans")
@@ -162,120 +112,47 @@ def run_bench(
         "n_docs": n_docs,
         "docs_per_sec": docs_per_sec,
         **cfg,
+        "steal_pct": steal,
     }
-    if steal:
-        result["steal_pct"] = steal
-    if remeasured:
-        result["remeasured_runs"] = remeasured
-    if fresh_proc:
-        result["fresh_process_retimed"] = fresh_proc
     result.update(_deltas_vs_prev(timings, steal, cfg=cfg))
     result.update(_scaling_evidence())
     spark.stop()
     return result
 
 
-def _fresh_process_retime(
-    names: list[str], sf_dir: str, cpus: int
-) -> dict | None:
-    """Re-time ``names`` in a genuinely fresh process (own JVM, own
-    Python workers) and return its ``{"queries": ..., "steal_pct":
-    ...}``; None if the subprocess fails (the in-process numbers then
-    stand, flagged)."""
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--raw",
-        "--only",
-        ",".join(names),
-        "--sf-dir",
-        sf_dir,
-        "--cpus",
-        str(cpus),
-    ]
-    try:
-        p = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
-    except (OSError, subprocess.TimeoutExpired):
-        return None
-    if p.returncode != 0 or not p.stdout.strip():
-        return None
-    try:
-        return json.loads(p.stdout.strip().splitlines()[-1])
-    except ValueError:
-        return None
-
-
-def _cpu_steal_counters() -> tuple[int, int] | None:
-    """(steal_ticks, total_ticks) from /proc/stat — the hypervisor
-    CPU-steal evidence the round-2 VERDICT asked to record per query
-    (unannotated regressions like t1's +15.2% were unadjudicable)."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        return (vals[7] if len(vals) > 7 else 0, sum(vals))
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _steal_pct(s0, s1) -> float | None:
-    if s0 is None or s1 is None or s1[1] <= s0[1]:
-        return None
-    return round(100.0 * (s1[0] - s0[0]) / (s1[1] - s0[1]), 1)
-
-
 def _scaling_evidence() -> dict:
     """COMPACT pointer to the two-parallelism scaling measurement
     (tools/bench_scaling.py writes BENCH/scaling.json; fresh-JVM,
     steal-budgeted — too slow to recompute inside every bench run).
-    Round-3 VERDICT: embedding the full scaling+native payloads pushed
-    the final JSON line past the driver's tail capture and broke the
-    machine-readable contract — so only the headline efficiencies ride
-    along; the bulky evidence stays in BENCH/ files, referenced by
-    path."""
+    Only the headline efficiencies ride along; the bulky evidence
+    stays in BENCH/scaling.json, referenced by path."""
     here = os.path.dirname(os.path.abspath(__file__))
-    out: dict = {}
     path = os.path.join(here, "BENCH", "scaling.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            s = json.load(f)
-        out["scaling"] = {
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        s = json.load(f)
+    return {
+        "scaling": {
             "eff_2_8": s.get("eff_2_8"),
             "eff_8_32": s.get("eff_8_32"),
             "steal_at_best": s.get("steal_at_best"),
             "budget_met": s.get("budget_met"),
             "file": "BENCH/scaling.json",
         }
-    if os.path.exists(os.path.join(here, "BENCH", "native.json")):
-        # paged+native throughput (tools/bench_native.py): the
-        # real-kernel decode path incl. the fused/paged skew crossover
-        out["native_file"] = "BENCH/native.json"
-    return out
+    }
 
 
-def _recover_from_tail(tail: str) -> dict | None:
-    """Salvage (queries, sf, cpus, timing_method) from a driver round
-    record whose JSON line failed the driver's own parse (the record
-    keeps the raw stdout tail, possibly truncated mid-line at the
-    front). The queries object is flat name→seconds, so a non-greedy
-    brace match is exact."""
-    import re
-
-    m = re.search(r'"queries":\s*\{([^{}]*)\}', tail)
-    if not m:
-        return None
-    try:
-        out: dict = {"queries": json.loads("{" + m.group(1) + "}")}
-    except ValueError:
-        return None
-    for key, cast in (("sf", float), ("cpus", int)):
-        km = re.search(rf'"{key}":\s*([0-9.]+)', tail)
-        if km:
-            out[key] = cast(km.group(1))
-    tm = re.search(r'"timing_method":\s*"([^"]+)"', tail)
-    if tm:
-        out["timing_method"] = tm.group(1)
-    return out
+def _round_files(directory: str, pattern: str) -> list[tuple[int, str]]:
+    """(round number, file name) of every ``pattern`` match in
+    ``directory``, oldest first; [] if the directory is absent."""
+    if not os.path.isdir(directory):
+        return []
+    return sorted(
+        (int(m.group(1)), f)
+        for f in os.listdir(directory)
+        if (m := re.fullmatch(pattern, f))
+    )
 
 
 def _deltas_vs_prev(
@@ -285,38 +162,26 @@ def _deltas_vs_prev(
     *,
     cfg: dict,
 ) -> dict:
-    """Per-query deltas vs the most recent RECOVERABLE BENCH_r{N}.json
-    (driver round record): negative pct = faster this round; queries
-    slower by >10% are flagged as regressions, each with a one-line
-    adjudication (steal-annotated — round-2 VERDICT tightened the
-    threshold from 20% after d3 +2.2% and t1 +15.2% sailed through
-    unflagged). Timings are comparable only when sf, cpus and
-    timing_method all match: ``cfg`` carries this run's values, and a
-    previous record that differs in any of them yields no deltas and
-    no flags (a local[32] record says nothing about a 4-core run).
+    """Per-query deltas vs the newest BENCH_r{N}.json (driver round
+    record) whose JSON line parsed: negative pct = faster this round;
+    queries slower by >10% are flagged as regressions, each with a
+    one-line steal-annotated adjudication. Timings are comparable only
+    when sf, cpus and timing_method all match: ``cfg`` carries this
+    run's values, and a previous record that differs in any of them
+    yields no deltas and no flags (a local[32] record says nothing
+    about a 4-core run).
 
-    Rounds are walked newest→oldest and the first whose queries can be
-    parsed or tail-salvaged wins (round-4 VERDICT: BENCH_r04.json's
-    tail truncation chopped the ``"queries"`` key entirely, so pinning
-    on ``rounds[-1]`` silently emptied every future delta).
-    ``here`` overrides the directory scanned (tests)."""
-    import re
-
+    Rounds are walked newest→oldest; a record without parsed
+    ``queries`` (``parsed: null`` when an old line outgrew the driver's
+    tail capture) is skipped. ``here`` overrides the directory scanned
+    (tests)."""
     here = here or os.path.dirname(os.path.abspath(__file__))
-    rounds = sorted(
-        (f for f in os.listdir(here) if re.fullmatch(r"BENCH_r\d+\.json", f)),
-        key=lambda f: int(re.findall(r"\d+", f)[0]),
-    )
     prev, prev_name = None, None
-    for name in reversed(rounds):
+    for _, name in reversed(_round_files(here, r"BENCH_r(\d+)\.json")):
         with open(os.path.join(here, name)) as f:
             cand = json.load(f)
         if "parsed" in cand:  # driver records wrap the JSON line
-            # parsed:null = the line outgrew the driver's tail capture;
-            # recover the fields the delta comparison needs from the
-            # raw tail text rather than crashing or silently dropping
-            # round-over-round tracking
-            cand = cand["parsed"] or _recover_from_tail(cand.get("tail") or "")
+            cand = cand["parsed"]
         if isinstance(cand, dict) and cand.get("queries"):
             prev, prev_name = cand, name
             break
@@ -326,7 +191,7 @@ def _deltas_vs_prev(
                 "timing_method": prev.get("timing_method", "single_run")}
     if prev_cfg != {k: cfg.get(k) for k in prev_cfg}:
         return {}
-    prev_q = prev.get("queries") or {}
+    prev_q = prev["queries"]
     deltas = {
         name: round((sec - prev_q[name]) / prev_q[name] * 100.0, 1)
         for name, sec in timings.items()
@@ -360,37 +225,27 @@ MAX_LINE_BYTES = 1800
 
 # moved wholesale into the detail file — diagnostics, not the headline
 # contract (queries/value/docs_per_sec/scaling stay on the line)
-SPILL_KEYS = (
-    "steal_pct",
-    "remeasured_runs",
-    "fresh_process_retimed",
-    "prev_cfg",
-    "delta_pct_vs_prev",
-    "regressions",
-)
+SPILL_KEYS = ("steal_pct", "prev_cfg", "delta_pct_vs_prev", "regressions")
 
 
 def _next_round_detail_path(here: str) -> str:
-    """BENCH/record_r{N}.json where N = (latest BENCH_r*.json round)+1 —
-    the round the driver is about to record this run under."""
-    import re
-
-    nums = [
-        int(re.findall(r"\d+", f)[0])
-        for f in os.listdir(here)
-        if re.fullmatch(r"BENCH_r\d+\.json", f)
-    ]
+    """BENCH/record_r{N}.json for the round the driver is about to
+    record this run under: N is one past both the newest BENCH_r*.json
+    and the newest BENCH/record_r*.json, so an existing detail record
+    is never overwritten."""
+    nums = [n for n, _ in _round_files(here, r"BENCH_r(\d+)\.json")]
+    nums += [n for n, _ in _round_files(os.path.join(here, "BENCH"), r"record_r(\d+)\.json")]
     n = (max(nums) + 1) if nums else 1
     return os.path.join("BENCH", f"record_r{n:02d}.json")
 
 
 def _compact_line(result: dict, detail_rel: str) -> tuple[str, dict, dict]:
     """(final stdout line, the compact record it encodes, full detail
-    record). The line keeps the
-    driver-contract fields plus compact regression pointers; everything
-    in SPILL_KEYS lives only in the detail file. If the line still
-    overflows (headline suite growth), the scaling block degrades to
-    its file pointer before anything contract-bearing is touched."""
+    record). The line keeps the driver-contract fields plus compact
+    regression pointers; everything in SPILL_KEYS lives only in the
+    detail file. If the line still overflows (headline suite growth),
+    the scaling block degrades to its file pointer before anything
+    contract-bearing is touched."""
     detail = dict(result)
     detail["detail_of"] = detail_rel
     compact = {k: v for k, v in result.items() if k not in SPILL_KEYS}
@@ -406,19 +261,14 @@ def _compact_line(result: dict, detail_rel: str) -> tuple[str, dict, dict]:
 
 
 def _parse_args(argv: list[str]) -> dict:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     out = {
         "sf_dir": os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        "raw": False,
-        "only": None,
+        "cpus": int(cpus) if cpus else len(os.sched_getaffinity(0)),
     }
     it = iter(argv)
     for a in it:
-        if a == "--raw":
-            out["raw"] = True
-        elif a == "--only":
-            out["only"] = next(it).split(",")
-        elif a == "--sf-dir":
+        if a == "--sf-dir":
             out["sf_dir"] = next(it)
         elif a == "--cpus":
             out["cpus"] = int(next(it))
@@ -429,16 +279,11 @@ def _parse_args(argv: list[str]) -> dict:
 
 if __name__ == "__main__":
     args = _parse_args(sys.argv[1:])
-    result = run_bench(args["sf_dir"], args["cpus"], names=args["only"], raw=args["raw"])
-    if args["raw"]:
-        # subprocess mode: minimal record for the parent, no spill
-        print(json.dumps(result, separators=(",", ":")))
-        sys.exit(0)
+    result = run_bench(args["sf_dir"], args["cpus"])
     # driver contract: ONE compact JSON object as the VERY LAST stdout
-    # line, sized for the driver's 2,000-byte tail capture (rounds 3
-    # AND 4 both recorded parsed:null when bulky diagnostics rode
-    # along). Bulk spills to BENCH/record_r{N}.json, referenced by
-    # path; the line self-verifies it round-trips and fits.
+    # line, sized for the driver's 2,000-byte tail capture. Bulk spills
+    # to BENCH/record_r{N}.json, referenced by path; the line
+    # self-verifies it round-trips and fits.
     here = os.path.dirname(os.path.abspath(__file__))
     detail_rel = _next_round_detail_path(here)
     line, compact, detail = _compact_line(result, detail_rel)

@@ -1,12 +1,12 @@
 """Scalar text functions of the extraction engine (SURVEY.md §2.8).
 
-Python forms (used inside the per-doc geometry kernels and the oracle)
-plus Spark-expression builders for the relationally-expressible pieces:
-the IL1-flex matchers F4-F6 compile to anchored/unanchored regexes
-consumed by ``rlike`` — char-wise equivalent to the reference's
+Python forms, used inside the per-doc geometry kernels and the oracle.
+The IL1-flex matchers F4-F6 are char-wise equivalent to the reference's
 character loop (/root/reference/extractor.py:249-269): expected
 uppercase 'I' also accepts 'L'/'l'/'1'; all other positions are
-case-insensitive equality.
+case-insensitive equality. ``flex_regex`` compiles the same match to an
+anchored/unanchored regex, which the f4 driver gate applies with
+``rlike`` over an uppercased column.
 
 The per-doc kernels match through a per-page token index built from
 the pieces here: ``token_keys`` (each token's F1/F7 keys and their
@@ -226,30 +226,6 @@ class KeyIndex:
                 break
             i = text.find(pat, nxt)
         return out
-
-
-# ---------------------------------------------------------------------------
-# Spark expression builders (JVM-side fast path for the relational forms)
-# ---------------------------------------------------------------------------
-
-
-def spark_normalize_expr(col_name: str):
-    """Approximate F1 as a pure Catalyst expression (no UDF): assumes
-    ASCII input (true for the synthetic fixtures; real OCR output with
-    non-ASCII goes through the pandas-UDF NFKD path)."""
-    from pyspark.sql import functions as F
-
-    c = F.regexp_replace(F.col(col_name), r"[/\s\-]", "")
-    c = F.regexp_replace(c, r"^[^a-zA-Z]+", "")
-    c = F.regexp_replace(c, r"[^a-zA-Z]+$", "")
-    return F.upper(c)
-
-
-def spark_flex_match_expr(col_name: str, expected: str, anchor: str = "both"):
-    """F4/F5/F6 as an ``rlike`` over the uppercased candidate column."""
-    from pyspark.sql import functions as F
-
-    return F.upper(F.col(col_name)).rlike(flex_regex(expected, anchor))
 
 
 def detect_schema_variant(page1_text: str) -> str:

@@ -336,34 +336,6 @@ def cms_query(
     )
 
 
-def cms_oracle_sql(
-    table: str, value_col: str, items_sql: str, depth: int = 4, width: int = 256
-) -> str:
-    """Build + query in ANSI SQL for the DuckDB oracle: identical
-    salted hashes, identical min-over-rows estimate. ``items_sql`` is a
-    subquery yielding the items to estimate (column ``{value_col}``)."""
-    # DuckDB lacks a struct-array explode as terse as Spark's; use a
-    # UNION ALL over the depth hash rows instead (same cells).
-    build_rows = " UNION ALL ".join(
-        f"SELECT {i} AS row, CAST(concat('0x', substr(md5(concat('cms{i}:', {value_col})), 1, 15)) AS BIGINT) % {width} AS bucket FROM {table}"
-        for i in range(depth)
-    )
-    query_rows = " UNION ALL ".join(
-        f"SELECT {value_col}, {i} AS row, CAST(concat('0x', substr(md5(concat('cms{i}:', {value_col})), 1, 15)) AS BIGINT) % {width} AS bucket FROM items"
-        for i in range(depth)
-    )
-    return f"""
-WITH cms AS (
-  SELECT row, bucket, count(*) AS cnt FROM ({build_rows}) GROUP BY 1, 2),
-items AS ({items_sql}),
-cells AS ({query_rows})
-SELECT cells.{value_col},
-       min(coalesce(cms.cnt, 0)) AS est_cnt
-FROM cells LEFT JOIN cms USING (row, bucket)
-GROUP BY 1
-"""
-
-
 def _global_bottom_k(df: DataFrame, value_col: str, k: int) -> DataFrame:
     """One-row DataFrame holding the sorted bottom-k distinct hashes of
     ``value_col`` as an array. ``orderBy().limit(k)`` plans as

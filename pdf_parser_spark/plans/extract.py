@@ -275,8 +275,6 @@ def _assemble_stream_factory(sections: list[dict]):
 def _fused_factory(sections: list[dict], decoder: str):
     """Fused per-doc pipeline: decode + geometry + flattening in one
     narrow pass (no shuffle). Used when decode cost ≪ transport cost."""
-    import pickle as _p  # noqa: F401  (parity of imports with stream path)
-
     from pdf_parser_spark.sources import perception as P
     from pdf_parser_spark.sources.decoder import decode_doc
 
@@ -368,18 +366,6 @@ def extract_spans(
         .sortWithinPartitions("doc_id", "page_no")
     )
     return stream.mapInPandas(_assemble_stream_factory(sections), schema=OUT_SPANS_SCHEMA)
-
-
-def extract_spans_nested(out_flat: DataFrame) -> DataFrame:
-    """Flat span rows → per-doc ordered spans array (golden-table shape)."""
-    return out_flat.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("kind", "text", "media_ref", F.col("order"))),
-            lambda a, b: F.when(a["order"] < b["order"], -1)
-            .when(a["order"] > b["order"], 1)
-            .otherwise(0),
-        ).alias("spans")
-    )
 
 
 def lineage_metrics(docs: DataFrame, out_flat: DataFrame) -> DataFrame:

@@ -127,10 +127,6 @@ def native_ocr_tokens(img: np.ndarray) -> list[dict]:
     return _native_ocr(img)
 
 
-def native_ocr_yesno(img: np.ndarray) -> str:
-    return _native_yesno_ocr(img)
-
-
 def resolve_callable(spec: str) -> Callable:
     """``"package.module:attr"`` → callable. Used to bind loader/OCR
     implementations on executor workers from plain strings (Spark conf /

@@ -43,22 +43,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pdf_parser_spark.session import get_spark
 from pdf_parser_spark.plans.extract import extract_spans
-
-
-def _steal_counters():
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(v) for v in f.readline().split()[1:]]
-        return (vals[7] if len(vals) > 7 else 0, sum(vals))
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _steal_pct(s0, s1):
-    if s0 is None or s1 is None or s1[1] <= s0[1]:
-        return None
-    return round(100.0 * (s1[0] - s0[0]) / (s1[1] - s0[1]), 2)
-
+from perfbench.procfs import cpu_counters, steal_pct
 
 spark = get_spark("scaling", master="local[{cpus}]", shuffle_partitions={cpus})
 docs = spark.read.parquet({docs_path!r})
@@ -67,11 +52,11 @@ n_docs = docs.count()
 extract_spans(docs).write.format("noop").mode("overwrite").save()
 runs, steals = [], []
 for _ in range(2 if {cpus} <= 2 else 3):
-    s0 = _steal_counters()
+    s0 = cpu_counters()
     t0 = time.time()
     extract_spans(docs).write.format("noop").mode("overwrite").save()
     runs.append(round(time.time() - t0, 2))
-    steals.append(_steal_pct(s0, _steal_counters()))
+    steals.append(round(steal_pct(s0, cpu_counters()), 2))
 sec = min(runs)
 steal_at_best = steals[runs.index(sec)]
 print("RESULT::" + json.dumps({{"cpus": {cpus}, "n_docs": n_docs, "runs": runs,
